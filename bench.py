@@ -121,7 +121,9 @@ def _n_cpus() -> int:
     """The bench's core count ($SPARK_GRAFT_CPUS, the session.py default):
     stamped into the headline JSON and sidecar, and used to refuse
     adjudication across differing core counts."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from billing_etl_v1_spark.session import default_parallelism
+
+    return default_parallelism()
 
 
 def _load_stamp() -> dict:
@@ -341,11 +343,19 @@ def _adjudicate(
     # not plan changes) over the committed round-end sidecar. Timings are
     # only comparable at the same parallelism, so adjudication is skipped
     # entirely when the bench cpu count differs from the snapshot's
-    # recorded one. Snapshots written before the cpus field existed were
-    # all 32-core recordings (the only full-width protocol through r11).
+    # recorded one. A snapshot without the field has an UNKNOWN core
+    # count: it is still adjudicated, but only on the recording's own
+    # warm-min evidence — interleaved re-runs against a baseline of
+    # unknown width could convict on the core count alone.
     bench_cpus = _n_cpus()
-    base_cpus = base_doc.get("cpus", 32)
-    if bench_cpus != base_cpus:
+    base_cpus = base_doc.get("cpus")
+    if base_cpus is None:
+        print(
+            f"# --ab: {baseline_path} records no cpus; baseline core count "
+            "unknown -> adjudicating on recording warm-min evidence only",
+            file=sys.stderr,
+        )
+    elif bench_cpus != base_cpus:
         print(
             f"# --ab: bench cpus={bench_cpus} != baseline cpus={base_cpus}; "
             "timings not comparable across core counts -> adjudication skipped",
@@ -368,6 +378,15 @@ def _adjudicate(
         )
     }
     drifted = [n for n in drifted if n not in exonerated]
+    if base_cpus is None and drifted:
+        print(
+            f"# --ab: {drifted} not adjudicated: no warm-min evidence and "
+            "the baseline core count is unknown",
+            file=sys.stderr,
+        )
+        drifted = []
+        if not exonerated:
+            return None
     for n, best in exonerated.items():
         print(
             f"# --ab {n}: recorded {timings[n]} vs baseline {base[n]}, but "

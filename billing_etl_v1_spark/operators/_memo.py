@@ -19,22 +19,29 @@ memo+release pattern:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-Registry = dict[tuple[int, int], tuple[object, DataFrame]]
+Registry = dict[tuple, tuple[object, DataFrame]]
 
 
 def memo_persist(
     df: DataFrame,
     registry: Registry,
     storage: StorageLevel | None = None,
+    derive: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Return a persisted twin of ``df``, reusing the registry entry when an
-    equivalent plan was already persisted in this session."""
+    """Return a persisted twin of ``df`` — or of ``derive(df)`` — reusing
+    the registry entry when an equivalent ``df`` plan was already persisted
+    in this session. Keying on the input means a hit never builds
+    ``derive``'s plan."""
     spark = df.sparkSession
     analyzed = df._jdf.queryExecution().analyzed()
     key = (id(spark), analyzed.semanticHash())
+    if derive is not None:  # twins derived differently from one input
+        key += (derive,)
     entry = registry.get(key)
     if entry is not None:
         plan, hit = entry
@@ -52,6 +59,8 @@ def memo_persist(
             hit.unpersist()
         except Exception:
             pass
+    if derive is not None:
+        df = derive(df)
     cached = df.persist(storage) if storage is not None else df.cache()
     registry[key] = (analyzed, cached)
     return cached

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.functions import built_once, exact_sum
+
 # production grain — 8 keys
 # (reference billing_calculation_service.py:164-187,201-222)
 PIPELINE_KEYS = [
@@ -87,11 +89,13 @@ def source_aggregate(
     whole-table rollup/cube totals keep the DECIMAL path. Downstream
     pricing math stays double, like the reference's float pipeline.
     """
-    from billing_etl_v1_spark.functions import exact_sum
-
     keys = list(keys or PIPELINE_KEYS) + list(extra_keys or [])
-    aggs = [exact_sum(F.col(m)).alias(m) for m in (measures or SUM_MEASURES)]
-    return fact.groupBy(*keys).agg(*aggs)
+    return fact.groupBy(*keys).agg(*_exact_sums(tuple(measures or SUM_MEASURES)))
+
+
+@built_once
+def _exact_sums(measures: tuple[str, ...]) -> list[Column]:
+    return [exact_sum(F.col(m)).alias(m) for m in measures]
 
 
 def rollup_totals(fact: DataFrame) -> DataFrame:

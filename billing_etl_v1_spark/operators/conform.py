@@ -19,6 +19,7 @@ import datetime as _dt
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.functions import built_once
 from billing_etl_v1_spark.schemas import (
     TARGET_COLUMNS,
     TARGET_NULLABLE_STRING_COLUMNS,
@@ -44,18 +45,27 @@ def conform_to_target(
     into NULL, which then takes the same type-appropriate default as a
     missing value ('' / 0.0 / 0, NULL preserved for the nullable pair),
     so one poisoned row cannot kill a day-long backfill."""
+    cols = _target_columns(tuple(df.columns), strict)
+    if not include_etl_time:
+        return df.select(*[c for c in cols if c is not None])
+    etl = F.lit(etl_time).cast("timestamp") if etl_time else F.current_timestamp()
+    return df.select(*[etl.alias("etl_time") if c is None else c for c in cols])
+
+
+@built_once
+def _target_columns(present: tuple[str, ...], strict: bool) -> list[Column | None]:
+    """The target projection of a frame with columns ``present``; None
+    stands for etl_time, which is a per-run value."""
 
     def _cast(c: Column, t: str) -> Column:
         return c.cast(t) if strict else c.try_cast(t)
 
-    present = set(df.columns)
-    out: list[Column] = []
+    out: list[Column | None] = []
     for name in TARGET_COLUMNS:
         if name == "etl_time":
-            if not include_etl_time:
-                continue
-            col = F.lit(etl_time).cast("timestamp") if etl_time else F.current_timestamp()
-        elif name == "usage_day":
+            out.append(None)
+            continue
+        if name == "usage_day":
             # guarded like every other branch: absent -> typed NULL (a
             # month-grain rollup legitimately has no day column), not an
             # UNRESOLVED_COLUMN crash (review finding)
@@ -75,7 +85,7 @@ def conform_to_target(
         else:  # pragma: no cover - exhaustive above
             col = F.col(name)
         out.append(col.alias(name))
-    return df.select(*out)
+    return out
 
 
 def dq_audit(calculated: DataFrame, grain: list[str] | None = None) -> DataFrame:

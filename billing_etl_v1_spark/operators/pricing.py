@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.functions import built_once
 from billing_etl_v1_spark.schemas import CREDIT_BUCKET_COLUMNS
 
 # The account -> factor overlay is pure configuration, not a code path. The
@@ -48,11 +49,16 @@ def extra_discount_factor(mapping: dict[str, float] | None = None) -> Column:
     codegen (no shuffle, no broadcast needed for a few dozen literals;
     the reference's overlay is ~24 accounts)."""
     mapping = DEFAULT_EXTRA_DISCOUNTS if mapping is None else mapping
+    return _extra_discount_factor(tuple(mapping.items()))
+
+
+@built_once
+def _extra_discount_factor(items: tuple[tuple[str, float], ...]) -> Column:
     expr = F.lit(1.0)
     # group accounts by factor to keep the when-chain short, like the
     # reference's dict-of-lists (calculate/service.py:189-199)
     by_factor: dict[float, list[str]] = {}
-    for acct, f in mapping.items():
+    for acct, f in items:
         by_factor.setdefault(f, []).append(acct)
     for factor, accounts in by_factor.items():
         expr = F.when(F.col("billing_account_id").isin(accounts), F.lit(float(factor))).otherwise(
@@ -85,6 +91,11 @@ def with_pricing_modes(df: DataFrame) -> DataFrame:
     Expects the 6 rule columns from ``match_rules`` (discount/price as loose
     strings) plus internal measures from ``with_internal_measures``.
     """
+    return df.withColumns(_pricing_modes())
+
+
+@built_once
+def _pricing_modes() -> dict[str, Column]:
     mode = F.col("mode")
     discount_d = F.col("discount").cast("double")
     price_d = F.col("price").cast("double")
@@ -108,6 +119,4 @@ def with_pricing_modes(df: DataFrame) -> DataFrame:
         .when(mode == 4, credit_over_price)
         .otherwise(F.lit(0.0))
     )
-    return df.withColumns(
-        {"external_consumption": external, "discount_amount": discount_amount}
-    )
+    return {"external_consumption": external, "discount_amount": discount_amount}

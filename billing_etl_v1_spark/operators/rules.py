@@ -1,12 +1,12 @@
-"""Contract-rule matching: the 8-way NULL-wildcard priority join (J1).
+"""Contract-rule matching: the NULL-wildcard priority lookup (J1).
 
 Reference semantics (both implementations agree — SURVEY §2.3):
 
-- ``dim_contract`` rows are partitioned into 8 subsets by the NULL pattern of
+- ``dim_contract`` rows fall into 8 rules by the NULL pattern of
   (project_id, service_description, sku_id); NULL means wildcard
   (reference calculate/service.py:117-124; sql_template.py:47-61).
-- The fact is LEFT-joined to each subset on progressively longer key sets and
-  the winner is chosen **per column** with priority 8>4>6>2>7>3>5>1:
+- The fact matches each rule on progressively longer key sets and the
+  winner is chosen **per column** with priority 8>4>6>2>7>3>5>1:
   the SQL path is a per-column COALESCE (sql_template.py:93-98), and the
   pandas path's ``df.update`` skips NaN cells, which is the same per-column
   fallback (calculate/service.py:126-138 applies rules in reverse priority,
@@ -16,16 +16,19 @@ Reference semantics (both implementations agree — SURVEY §2.3):
   deterministic dedup (row_number over the key window, ordered by the rule
   payload columns, nulls last).
 
-Scale posture: the dim is broadcast-small (the reference keeps it whole in
-driver memory, billing_calculation_service.py:291-327), so all 8 joins are
-broadcast hash joins — zero shuffle of the 100 TB fact, one stage.
+Shape: the deduped dim is grouped per (month, account) into a map from
+``struct(rule, project_id, service_description, sku_id)`` to the payload;
+the fact makes ONE broadcast join and looks its key up under each rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.functions import built_once
 from billing_etl_v1_spark.operators import _memo
 
 # rule number -> non-wildcard dim columns (join keys beyond account)
@@ -67,33 +70,46 @@ def dedupe_dim(dim: DataFrame) -> DataFrame:
     )
 
 
-def split_rules(dim: DataFrame) -> dict[int, DataFrame]:
-    """P8: 8-way partition of the dim by NULL pattern
-    (reference calculate/service.py:117-124; sql_template.py:47-61)."""
-    out: dict[int, DataFrame] = {}
-    for rule, pattern in RULE_PATTERNS.items():
-        cond = F.lit(True)
-        for c in WILDCARD_COLUMNS:
-            cond = cond & (F.col(c).isNotNull() if c in pattern else F.col(c).isNull())
-        out[rule] = dim.filter(cond)
-    return out
+def _rule_map(dim: DataFrame) -> DataFrame:
+    """One row per (month, account) with its rules as a key -> payload map;
+    the rule number 1 + p + 2s + 4k from the NULL pattern is the
+    RULE_PATTERNS numbering. Keys must be unique (``dedupe_dim``)."""
+    p, s, k = (F.col(c).isNotNull().cast("int") for c in WILDCARD_COLUMNS)
+    key = F.struct((1 + p + 2 * s + 4 * k).alias("rule"), *WILDCARD_COLUMNS)
+    entry = F.struct(key, F.struct(*RULE_COLUMNS))
+    return dim.groupBy(
+        F.col("month").alias("__m"), F.col("billing_account_id").alias("__a")
+    ).agg(F.map_from_entries(F.collect_list(entry)).alias("__rules"))
 
 
-# session-scoped memo of cached (deduped) dims: repeated pipeline runs over
-# the same dim reuse ONE cached relation instead of stacking a new orphan
-# per call (round-1 advice); hits confirmed via sameResult — see _memo
+# session-scoped memo of cached rule maps keyed on the INPUT dim: repeated
+# runs over the same dim share ONE cached relation, not one orphan each, and a
+# hit skips building the dedupe and grouping plans — see _memo
 _DIM_CACHE: _memo.Registry = {}
-
-
-def _memo_cache_dim(dim: DataFrame) -> DataFrame:
-    return _memo.memo_persist(dim, _DIM_CACHE)
+_DERIVE = {True: lambda dim: _rule_map(dedupe_dim(dim)), False: _rule_map}
 
 
 def release_dim_cache(spark=None) -> int:
-    """Unpersist every dim ``match_rules`` cached (for ``spark`` only, or
-    all sessions); returns how many were released. Call between pipeline
+    """Unpersist every rule map ``match_rules`` cached (for ``spark`` only,
+    or all sessions); returns how many were released. Call between pipeline
     generations when the dim changes."""
     return _memo.release(_DIM_CACHE, spark)
+
+
+@built_once
+def _lookups(month_col: str) -> tuple[Column, dict[str, Column], dict[str, Column]]:
+    """The join condition; the fact's key under each rule, looked up in its
+    account's map (a NULL fact key in a column the rule needs gives a NULL
+    lookup key); and the per-column priority coalesce (sql_template.py:93-98)."""
+    on = (F.col(month_col) == F.col("__m")) & (F.col("billing_account_id") == F.col("__a"))
+    null, out = F.lit(None).cast("string"), {}
+    for rule in PRIORITY:
+        pattern = RULE_PATTERNS[rule]
+        fields = [(F.col(c) if c in pattern else null).alias(c) for c in WILDCARD_COLUMNS]
+        known = reduce(Column.__and__, [F.col(c).isNotNull() for c in pattern], F.lit(True))
+        key = F.when(known, F.struct(F.lit(rule).alias("rule"), *fields))
+        out[f"__r{rule}"] = F.element_at("__rules", key)
+    return on, out, {c: F.coalesce(*[F.col(f"__r{r}")[c] for r in PRIORITY]) for c in RULE_COLUMNS}
 
 
 def match_rules(
@@ -109,42 +125,23 @@ def match_rules(
     billing_calculation_service.py:129). Adds the 6 RULE_COLUMNS; ``discount``
     and ``price`` stay loosely-typed strings exactly like the dim
     (cast at use — reference calculate/service.py:51,61,70,87-88).
+    ``dedupe=False`` requires unique rule keys (a duplicate fails the map).
 
-    ``cache_dim`` materializes the deduped dim once so the 8 join subtrees
-    broadcast from one in-memory relation instead of re-computing the dim
-    lineage 8 times — the Spark analogue of the reference loading the whole
-    dim into driver memory once per run
-    (billing_calculation_service.py:291-327). The dim is broadcast-small by
-    contract, so this is O(rules) memory. The cached relation is memoized
-    per (session, dim plan) — repeated calls share it rather than leaking
-    one per call; ``release_dim_cache`` drops it explicitly.
+    ``cache_dim`` materializes the rule map once per (session, input dim
+    plan), as the reference loads the dim into driver memory once per run
+    (billing_calculation_service.py:291-327); ``release_dim_cache`` drops
+    it. The 8 lookups get their own projection: inlined into the 6
+    coalesces they would not be shared.
     """
-    if dedupe:
-        dim = dedupe_dim(dim)
-    if cache_dim:
-        dim = _memo_cache_dim(dim)
-    subsets = split_rules(dim)
-
-    df = fact
-    for rule in PRIORITY:
-        pattern = RULE_PATTERNS[rule]
-        keys = ("billing_account_id",) + pattern
-        r = subsets[rule].select(
-            F.col("month").alias(f"__m_{rule}"),
-            *[F.col(k).alias(f"__k_{rule}_{k}") for k in keys],
-            *[F.col(c).alias(f"__{c}_{rule}") for c in RULE_COLUMNS],
-        )
-        cond = F.col(month_col) == F.col(f"__m_{rule}")
-        for k in keys:
-            cond = cond & (F.col(k) == F.col(f"__k_{rule}_{k}"))
-        df = df.join(F.broadcast(r), on=cond, how="left").drop(
-            f"__m_{rule}", *[f"__k_{rule}_{k}" for k in keys]
-        )
-
-    # per-column priority coalesce (sql_template.py:93-98)
-    for c in RULE_COLUMNS:
-        df = df.withColumn(c, F.coalesce(*[F.col(f"__{c}_{r}") for r in PRIORITY]))
-    return df.drop(*[f"__{c}_{r}" for c in RULE_COLUMNS for r in PRIORITY])
+    derive = _DERIVE[dedupe]
+    rules = _memo.memo_persist(dim, _DIM_CACHE, derive=derive) if cache_dim else derive(dim)
+    on, lookups, coalesced = _lookups(month_col)
+    return (
+        fact.join(F.broadcast(rules), on=on, how="left")
+        .withColumns(lookups)
+        .withColumns(coalesced)
+        .drop("__m", "__a", "__rules", *lookups)
+    )
 
 
 def restrict_dim_to_fact_accounts(dim: DataFrame, fact: DataFrame) -> DataFrame:

@@ -6,22 +6,25 @@ loop (main.py:85-133), 10k-row batch loop
 (billing_calculation_service.py:450-462) and the ClickHouse SQL template
 (calculate/sql_template.py:3-209) all collapse into
 
-    scan -> filter(month/day) -> groupBy.agg -> 8 broadcast joins + coalesce
-         -> pricing expressions -> conform
+    scan -> filter(month/day) -> groupBy.agg -> 1 broadcast rule-map join
+         -> 8 rule lookups + coalesce -> pricing expressions -> conform
 
 Catalyst plans it; AQE handles skew (replacing the hardcoded heavy-account
 chunking, main.py:86-104). At 100 TB the only shuffle is the grain
-aggregation; the dim joins are broadcast and everything downstream is
-map-side expression work.
+aggregation; the dim join is broadcast and everything downstream is
+map-side expression work. The operators build their expression trees once
+per process (``functions.built_once``), so a run's plan build costs a few
+hundred Python-to-JVM calls, not thousands.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.functions import built_once
 from billing_etl_v1_spark.operators.aggregate import (
     DETAIL_KEYS,
     PIPELINE_KEYS,
@@ -39,11 +42,13 @@ from billing_etl_v1_spark.operators.rules import match_rules
 def with_contract_month(df: DataFrame) -> DataFrame:
     """F6: 'YYYYMM' -> 'YYYY-MM' (reference main.py:34-36,
     billing_calculation_service.py:129)."""
-    return df.withColumn(
-        "contract_month",
-        F.concat(
-            F.substring("invoice_month", 1, 4), F.lit("-"), F.substring("invoice_month", 5, 2)
-        ),
+    return df.withColumn("contract_month", _contract_month())
+
+
+@built_once
+def _contract_month() -> Column:
+    return F.concat(
+        F.substring("invoice_month", 1, 4), F.lit("-"), F.substring("invoice_month", 5, 2)
     )
 
 

@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads), but
-every config here is chosen for the 100 TB / 1000-executor posture:
+Runs on ``local[$SPARK_GRAFT_CPUS]``, defaulting to the cores this process
+may use (its CPU affinity), so a cron on a small box is not oversubscribed.
+Every other config here is chosen for the 100 TB / 1000-executor posture:
 
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting) —
   replaces the reference's hand-coded heavy-account chunking
@@ -19,7 +20,9 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the usable cores."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(

@@ -249,6 +249,54 @@ def test_match_rules_dim_cache_does_not_grow(spark):
     assert len(rules_mod._DIM_CACHE) == 0
 
 
+def test_pipeline_memos_match_fresh_builds(spark):
+    """Expression trees are built once per process (``functions.built_once``)
+    and the rule map is memoized on the input dim. Runs with different
+    extra-discount mappings, etl_times and grains in one process must each
+    equal the same call made after clearing every memo, and repeating the
+    identical calls must not grow any memo."""
+    import datetime as dt
+    from collections import Counter
+
+    import __spark_entry__ as em
+    from billing_etl_v1_spark.functions import BUILT_ONCE
+    from billing_etl_v1_spark.operators import rules as rules_mod
+    from billing_etl_v1_spark.oracle import TEST_EXTRA_DISCOUNTS
+    from billing_etl_v1_spark.plans.pipeline import billing_pipeline
+    from tests.conftest import SF_SMALL
+
+    fact, dim = em._billing_ctx(spark, SF_SMALL)
+    other = {acct: 0.5 for acct in TEST_EXTRA_DISCOUNTS}
+    t1, t2 = dt.datetime(2026, 1, 2, 3, 4, 5), dt.datetime(2026, 2, 1)
+    calls = [
+        dict(grain="detail", extra_discounts=TEST_EXTRA_DISCOUNTS, etl_time=t1),
+        dict(grain="detail", extra_discounts=other, etl_time=t2),
+        dict(grain="pipeline", extra_discounts=TEST_EXTRA_DISCOUNTS, etl_time=t2),
+        dict(grain="pipeline", extra_discounts=other, etl_time=t1),
+    ]
+
+    def run(kw):
+        return Counter(billing_pipeline(fact, dim, invoice_month="199506", **kw).collect())
+
+    def clear():
+        for builder in BUILT_ONCE:
+            builder.cache_clear()
+        rules_mod.release_dim_cache(spark)
+
+    def sizes():
+        return [b.cache_info().currsize for b in BUILT_ONCE] + [len(rules_mod._DIM_CACHE)]
+
+    clear()
+    warm = [run(kw) for kw in calls]
+    grown = sizes()
+    assert [run(kw) for kw in calls] == warm
+    assert sizes() == grown
+    for kw, got in zip(calls, warm):
+        clear()
+        assert run(kw) == got, kw
+    assert len(warm[0]) > 0 and warm[0] != warm[1] and warm[0] != warm[2]
+
+
 def test_exact_sum_is_exact_signed_and_partition_order_proof(spark):
     """The (hi, lo) BIGINT-pair accumulation behind source_aggregate and
     tpch_q1: exact on the 1e-10 grid for signed values, and bit-identical

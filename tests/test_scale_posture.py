@@ -41,8 +41,8 @@ def nodes(plan: str, name: str) -> set[str]:
 
 def test_flagship_joins_all_broadcast(spark):
     plan = plan_of(spark, "billing_flagship")
-    # the 8-way priority rule join must build on the (tiny) dim side
-    assert len(nodes(plan, "BroadcastHashJoin")) == 8
+    # ONE rule join: the fact probes the (tiny) broadcast rule map
+    assert len(nodes(plan, "BroadcastHashJoin")) == 1
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
 
