@@ -1,7 +1,8 @@
 """Measure the reference engine's single-node throughput on OUR synthetic
-fact at a given scale factor, producing the denominator for bench.py's
-engine-vs-reference ratio (BASELINE.md's "within 2x" bar was unmeasurable in
-round 1 because the reference publishes no numbers).
+fact at a given scale factor, producing the reference wall-clock that
+BASELINE.md divides by the engine's time for its engine-vs-reference
+ratio (BASELINE.md's "within 2x" bar was unmeasurable in round 1 because
+the reference publishes no numbers).
 
 Faithful to the reference's execution model (nothing is copied — the
 reference's own ``CalculateService`` is imported from /root/reference at
@@ -24,7 +25,7 @@ runtime and driven exactly like production drives it):
 
 Timing covers the compute path only (aggregation queries + pandas batches);
 materializing the synthetic fact itself is fixture work — in production the
-table is at rest in ClickHouse, and Spark's bench likewise reads it at rest.
+table is at rest in ClickHouse, and the Spark engine likewise reads it at rest.
 
 Usage: python baseline_ref.py [sf_dir]   (default /root/testdata/sf0.1)
 Prints one JSON line: {"metric": "reference_pandas_baseline", ...}

@@ -18,8 +18,8 @@ from billing_etl_v1_spark.operators import _memo
 # shared registry for rank consumers that opt into memo-persisting the
 # two-phase rank's windowed table: value_deciles ON by default (measured
 # 1.10-1.41x, probe_r10 rank_memo_ab); the text.py rank queries
-# (quality_percentiles, vocabulary_coverage, ccnet_buckets) carry the same
-# persist= switch but measured a wash and default OFF. One registry —
+# (quality_percentiles, vocabulary_coverage, ccnet_buckets) measured a wash
+# (0.85-1.11x) and do not persist. One registry —
 # entries are keyed by plan, so distinct queries never collide, and ONE
 # release call frees a whole pipeline generation. concurrency_profile keeps
 # its own registry (release_boundary_cache) for interval-face lifecycles.
@@ -430,7 +430,7 @@ def value_deciles(
     Default ON by measurement: probe_r10 rank_memo_ab reads 1.10x at
     sf0.1 growing to 1.41x at x16 replication (the per-event rank input
     is the one whose tripled upstream grows with the data); the sibling
-    text-rank queries measured a wash and default OFF.
+    text-rank queries measured a wash and do not persist.
     """
     events = events.withColumn("value", finite_or_null("value"))
 

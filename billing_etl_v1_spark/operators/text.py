@@ -869,9 +869,7 @@ def corpus_dq_audit(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_percentiles(
-    df: DataFrame, text_col: str = "text", persist: bool = False
-) -> DataFrame:
+def quality_percentiles(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Rank-normalized document quality: every doc's exact global rank and
     percentile bucket (1-100) over the (quality_score, doc_id) total
     order. Absolute quality scores drift with corpus mix; percentile
@@ -884,17 +882,8 @@ def quality_percentiles(
     machinery is generic: NO single-task global sort here either. The
     bucket is pure integer arithmetic off (rank, n), so the oracle's
     plain-window formulation is value-identical.
-
-    ``persist=True`` memo-persists the rank's windowed table (shared
-    ``events._RANK_CACHE``; ``events.release_rank_cache`` frees it).
-    Default OFF by measurement: the probe_r10 rank_memo_ab lane reads
-    0.95-0.99x at sf0.1 AND x16 — the text_stats upstream is too cheap
-    relative to the persist overhead at any measured scale.
     """
-    from billing_etl_v1_spark.operators.events import (
-        _RANK_CACHE,
-        distributed_total_rank,
-    )
+    from billing_etl_v1_spark.operators.events import distributed_total_rank
 
     # doc_id is the rank tiebreaker: NULL ids sort FIRST on Spark and LAST
     # on DuckDB, so an identity-less doc would shift every rank after it
@@ -902,11 +891,7 @@ def quality_percentiles(
     scored = text_stats(df.filter(F.col("doc_id").isNotNull()), text_col).select(
         "doc_id", "quality_score"
     )
-    ranked = distributed_total_rank(
-        scored,
-        ["quality_score", "doc_id"],
-        memo=_RANK_CACHE if persist else None,
-    )
+    ranked = distributed_total_rank(scored, ["quality_score", "doc_id"])
     return ranked.select(
         "doc_id",
         "quality_score",
@@ -917,7 +902,7 @@ def quality_percentiles(
 
 
 def vocabulary_coverage(
-    df: DataFrame, text_col: str = "text", min_freq: int = 1, persist: bool = False
+    df: DataFrame, text_col: str = "text", min_freq: int = 1
 ) -> DataFrame:
     """Corpus vocabulary with coverage curve: every distinct token's
     frequency, global frequency rank, and the cumulative fraction of all
@@ -930,18 +915,8 @@ def vocabulary_coverage(
     extension) over the (-freq, token) total order — exact integers, no
     unpartitioned window, no second sort. The coverage fraction is a
     single division of exact BIGINTs (quantized).
-
-    ``persist=True`` memo-persists the rank's windowed table (shared
-    ``events._RANK_CACHE``). Default OFF by measurement: persisting the
-    full token-vocabulary table costs MORE than recomputing the
-    explode+count per rank reference (probe_r10 rank_memo_ab: 0.97x at
-    sf0.1, 0.85x at x16 — the one lane where the persisted table grows
-    with the vocabulary, not the doc count).
     """
-    from billing_etl_v1_spark.operators.events import (
-        _RANK_CACHE,
-        distributed_total_rank,
-    )
+    from billing_etl_v1_spark.operators.events import distributed_total_rank
 
     counts = (
         df.select(F.explode(_tokens(F.col(text_col))).alias("token"))
@@ -955,7 +930,6 @@ def vocabulary_coverage(
         ["__negfreq", "token"],
         rank_col="rank",
         sum_col="freq",
-        memo=_RANK_CACHE if persist else None,
     )
     return ranked.select(
         "token",
@@ -966,9 +940,7 @@ def vocabulary_coverage(
     )
 
 
-def ccnet_buckets(
-    df: DataFrame, text_col: str = "text", persist: bool = False
-) -> DataFrame:
+def ccnet_buckets(df: DataFrame, text_col: str = "text") -> DataFrame:
     """CCNet's head/middle/tail partition, model-free: rank every document
     by corpus-frequency fluency (the perplexity proxy of
     :func:`bigram_fluency` — higher mean bigram frequency reads as lower
@@ -979,16 +951,9 @@ def ccnet_buckets(
 
     The global ordering uses the two-phase distributed rank (no
     single-task sort); the third-assignment is exact integer arithmetic
-    off (rank, n). ``persist=True`` memo-persists the rank's windowed
-    table (shared ``events._RANK_CACHE``). Default OFF by measurement:
-    1.04-1.11x at sf0.1/x16 (probe_r10 rank_memo_ab) — a wash; the
-    bigram_fluency cost sits in shuffle stages the re-references appear
-    to amortize already, so the persist buys ~nothing here.
+    off (rank, n).
     """
-    from billing_etl_v1_spark.operators.events import (
-        _RANK_CACHE,
-        distributed_total_rank,
-    )
+    from billing_etl_v1_spark.operators.events import distributed_total_rank
 
     scored = bigram_fluency(df, text_col).select(
         "doc_id", "lang", "source", "avg_bigram_freq"
@@ -997,7 +962,6 @@ def ccnet_buckets(
         scored.withColumn("__negf", -F.col("avg_bigram_freq")),
         ["__negf", "doc_id"],
         rank_col="rank",
-        memo=_RANK_CACHE if persist else None,
     )
     bucket = F.expr("CAST((rank - 1) * 3 div __total + 1 AS INT)")
     label = (

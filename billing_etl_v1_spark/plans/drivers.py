@@ -6,7 +6,8 @@ orchestration (SURVEY §2.9).
 'YYYYMM' — reference main.py:165-171); ``run_month`` is the monthly
 backfill (excute_month_task.py:167-200). Everything else the reference's
 drivers did — per-day loops, per-account loops, tmp-table swaps, manual
-deletes — is subsumed by the single DAG + dynamic partition overwrite.
+deletes — is subsumed by the single DAG + dynamic partition overwrite,
+except that a window day with no output rows is not emptied (``run_daily``).
 No scheduler lives in the engine; any cron can call these.
 """
 
@@ -38,7 +39,9 @@ def run_daily(
     **pipeline_kwargs,
 ) -> tuple[str, dt.date, dt.date]:
     """Daily incremental run: compute the lookback window and overwrite
-    exactly those day partitions."""
+    the day partitions the output contains. A window day with no output
+    rows is not a partition of the write, so it keeps whatever an earlier
+    run left there (see ``write_calculated``; ROADMAP.md open item 2)."""
     invoice_month, day_start, day_end = daily_window(process_date, lookback_days)
     out = billing_pipeline(
         fact,
@@ -60,8 +63,10 @@ def run_month(
     **pipeline_kwargs,
 ) -> str:
     """Monthly backfill: one DAG over the whole month, partition overwrite
-    (replaces the reference's delete tmp -> compute -> delete target ->
-    merge sequence, excute_month_task.py:167-200)."""
+    (stands in for the reference's delete tmp -> compute -> delete target ->
+    merge sequence, excute_month_task.py:167-200). Like ``run_daily`` it
+    replaces only the day partitions the output contains; a day of the
+    month with no output rows keeps its old rows."""
     out = billing_pipeline(fact, dim, invoice_month=invoice_month, **pipeline_kwargs)
     write_calculated(out, target_path)
     return invoice_month

@@ -7,8 +7,10 @@ Every other config here is chosen for the 100 TB / 1000-executor posture:
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting) —
   replaces the reference's hand-coded heavy-account chunking
   (reference main.py:86-104).
-- Partition-overwrite mode ``dynamic`` — replaces the reference's
-  delete-partition-then-insert idempotency dance (reference main.py:177-201).
+- Partition-overwrite mode ``dynamic`` — an overwrite replaces only the
+  partitions its output contains. It stands in for the reference's
+  delete-window-then-insert (reference main.py:177-201) but does not empty
+  window days that have no output rows (ROADMAP.md open item 2).
 - Arrow enabled for the few pandas-interop paths (multimodal UDFs).
 """
 

@@ -1,14 +1,18 @@
-"""Idempotent partitioned sink — the Spark-native replacement for the
-reference's delete-then-insert + tmp-table swap (SURVEY §2.7, D1-D3).
+"""Partitioned sink — the Spark-native stand-in for the reference's
+delete-then-insert + tmp-table swap (SURVEY §2.7, D1-D3).
 
 The reference makes re-runs idempotent with:
   ALTER TABLE ... DELETE WHERE invoice_month=... (main.py:177-183,186-192)
   INSERT INTO target SELECT FROM tmp WHERE window  (main.py:195-201)
 
 With dynamic partition overwrite (set in session.get_spark), one
-``mode("overwrite")`` write replaces exactly the partitions present in the
-incoming frame and leaves every other partition untouched — the tmp-table
-dance disappears and re-runs are naturally idempotent per partition.
+``mode("overwrite")`` write replaces the partitions present in the incoming
+frame and leaves every other partition untouched. That is NOT the
+reference's window delete: a day in the run's window with no output rows
+(say, all of its usage restated away upstream) is not in the frame, so its
+stale rows survive the re-run. A re-run is idempotent only for the days it
+writes. Making the drivers replace the whole window is ROADMAP.md open
+item 2.
 
 At 100 TB: partition by (invoice_month, usage_day) so daily increments touch
 only their own day partitions and month backfills replace one month

@@ -124,3 +124,17 @@ def test_rotation_is_sustainable():
         f"next round would owe {len(next_overdue)} re-checks > window {WINDOW}; "
         "the registered surface has outrun the rotation budget"
     )
+
+
+def test_strict_artifact_green_and_full_registry():
+    """The committed STRICT_r*.json artifacts (VERDICT r9 #2) must each
+    record a full-registry 150/150 run — an artifact claiming less would
+    quietly weaken the closed registry's below-the-fold safety net."""
+    paths = glob.glob(os.path.join(REPO, "STRICT_r*.json"))
+    assert paths, "no STRICT_r*.json committed (round >= 10 must emit one)"
+    for path in paths:
+        with open(path) as fh:
+            art = json.load(fh)
+        assert art["checked"] == 150, f"{path}: checked {art['checked']} != 150"
+        assert art["strict_ok"] == 150, f"{path}: {art['failures']}"
+        assert len(art["queries"]) == 150

@@ -4,10 +4,12 @@ the Spark replacement for the reference's delete-then-insert swap."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
 from billing_etl_v1_spark.plans.drivers import daily_window, run_daily, run_month
+from billing_etl_v1_spark.session import default_parallelism
 from billing_etl_v1_spark.sources import synthetic
 from billing_etl_v1_spark.sources.readers import register_views
 from billing_etl_v1_spark.sources.writers import read_calculated
@@ -26,6 +28,13 @@ def test_daily_window_lookback_and_month_clamp():
     # near month start: clamped to the 1st
     m, s, e = daily_window(dt.date(2026, 1, 2))
     assert (m, s, e) == ("202601", dt.date(2026, 1, 1), dt.date(2026, 1, 3))
+
+
+def test_default_parallelism_env_then_usable_cores(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_parallelism() == len(os.sched_getaffinity(0))
 
 
 def test_month_overwrite_is_idempotent_and_partition_scoped(spark, tmp_path):
