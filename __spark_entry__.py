@@ -39,11 +39,7 @@ from billing_etl_v1_spark.plans import examples as example_plans
 from billing_etl_v1_spark.sources.readers import load_table
 from billing_etl_v1_spark.operators import aggregate as agg_ops
 from billing_etl_v1_spark.operators.credits import credits_pivot
-from billing_etl_v1_spark.operators.pricing import (
-    apply_extra_discount,
-    with_internal_measures,
-    with_pricing_modes,
-)
+from billing_etl_v1_spark.operators.pricing import with_pricing_modes
 from billing_etl_v1_spark.operators.rules import (
     RULE_COLUMNS,
     dedupe_dim,
@@ -134,7 +130,7 @@ def _matched_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = agg_ops.source_aggregate(
         with_contract_month(fact), keys=agg_ops.DETAIL_KEYS, extra_keys=["contract_month"]
     )
-    return match_rules(agg, dim, month_col="contract_month")
+    return match_rules(agg, dim)
 
 
 def _q_billing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,12 +168,7 @@ def _q_credits_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pricing_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    priced = with_pricing_modes(
-        apply_extra_discount(
-            with_internal_measures(_matched_detail(spark, sf_dir)),
-            oracle.TEST_EXTRA_DISCOUNTS,
-        )
-    )
+    priced = with_pricing_modes(_matched_detail(spark, sf_dir), oracle.TEST_EXTRA_DISCOUNTS)
     return round_doubles(
         priced.select(
             *agg_ops.DETAIL_KEYS,

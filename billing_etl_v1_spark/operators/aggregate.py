@@ -68,7 +68,6 @@ def source_aggregate(
     fact: DataFrame,
     keys: list[str] | None = None,
     extra_keys: list[str] | None = None,
-    measures: list[str] | None = None,
 ) -> DataFrame:
     """A1/A2: hash group-by over the fact grain with 13 SUM measures.
 
@@ -90,12 +89,12 @@ def source_aggregate(
     pricing math stays double, like the reference's float pipeline.
     """
     keys = list(keys or PIPELINE_KEYS) + list(extra_keys or [])
-    return fact.groupBy(*keys).agg(*_exact_sums(tuple(measures or SUM_MEASURES)))
+    return fact.groupBy(*keys).agg(*_exact_sums())
 
 
 @built_once
-def _exact_sums(measures: tuple[str, ...]) -> list[Column]:
-    return [exact_sum(F.col(m)).alias(m) for m in measures]
+def _exact_sums() -> list[Column]:
+    return [exact_sum(F.col(m)).alias(m) for m in SUM_MEASURES]
 
 
 def rollup_totals(fact: DataFrame) -> DataFrame:
@@ -140,7 +139,7 @@ def rollup_totals(fact: DataFrame) -> DataFrame:
     )
 
 
-def filter_month(fact: DataFrame, invoice_month: str | None) -> Column | DataFrame:
+def filter_month(fact: DataFrame, invoice_month: str | None) -> DataFrame:
     """P3: equality predicate on invoice_month — pushed to the parquet scan
     (partition pruning when the fact is laid out by invoice_month)."""
     if invoice_month is None:

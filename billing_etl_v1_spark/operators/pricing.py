@@ -28,51 +28,11 @@ from billing_etl_v1_spark.schemas import CREDIT_BUCKET_COLUMNS
 # sql_template.py:105-112). A reusable engine must not ship somebody's
 # customer list as its default, so here the default overlay is EMPTY (the
 # identity factor 1.0 for every account) and deployments pass their own
-# mapping to apply_extra_discount / billing_pipeline(extra_discounts=...);
-# the synthetic-fixture tests use oracle.TEST_EXTRA_DISCOUNTS, which
-# exercises all four tiers plus the ratio outlier.
+# mapping as with_pricing_modes(extra_discounts=...), which
+# billing_pipeline(extra_discounts=...) forwards; the synthetic-fixture tests
+# use oracle.TEST_EXTRA_DISCOUNTS, which exercises all four tiers plus the
+# ratio outlier.
 DEFAULT_EXTRA_DISCOUNTS: dict[str, float] = {}
-
-
-def with_internal_measures(df: DataFrame) -> DataFrame:
-    """C1 (reference calculate/service.py:177-178; sql_template.py:101-102)."""
-    return df.withColumns(
-        {
-            "internal_cost": F.col("cost") + F.col("internal_credits_cost"),
-            "internal_consumption": F.col("cost") + F.col("internal_credits_consumption"),
-        }
-    )
-
-
-def extra_discount_factor(mapping: dict[str, float] | None = None) -> Column:
-    """J3: map-side literal lookup — a when-chain stays inside whole-stage
-    codegen (no shuffle, no broadcast needed for a few dozen literals;
-    the reference's overlay is ~24 accounts)."""
-    mapping = DEFAULT_EXTRA_DISCOUNTS if mapping is None else mapping
-    return _extra_discount_factor(tuple(mapping.items()))
-
-
-@built_once
-def _extra_discount_factor(items: tuple[tuple[str, float], ...]) -> Column:
-    expr = F.lit(1.0)
-    # group accounts by factor to keep the when-chain short, like the
-    # reference's dict-of-lists (calculate/service.py:189-199)
-    by_factor: dict[float, list[str]] = {}
-    for acct, f in items:
-        by_factor.setdefault(f, []).append(acct)
-    for factor, accounts in by_factor.items():
-        expr = F.when(F.col("billing_account_id").isin(accounts), F.lit(float(factor))).otherwise(
-            expr
-        )
-    return expr
-
-
-def apply_extra_discount(df: DataFrame, mapping: dict[str, float] | None = None) -> DataFrame:
-    """C6, pandas-path semantics: scales ``internal_cost`` only
-    (reference calculate/service.py:206-209)."""
-    return df.withColumn(
-        "internal_cost", F.col("internal_cost") * extra_discount_factor(mapping)
-    )
 
 
 def _mode4_credit_part() -> Column:
@@ -85,17 +45,41 @@ def _mode4_credit_part() -> Column:
     return part
 
 
-def with_pricing_modes(df: DataFrame) -> DataFrame:
-    """C2-C5 + C7 defaults on a rule-matched frame.
+def with_pricing_modes(
+    df: DataFrame, extra_discounts: dict[str, float] | None = None
+) -> DataFrame:
+    """C1, C6 and C2-C5 + C7 defaults on a rule-matched frame, as one
+    projection like the reference's single SELECT (sql_template.py:101-200).
 
     Expects the 6 rule columns from ``match_rules`` (discount/price as loose
-    strings) plus internal measures from ``with_internal_measures``.
+    strings). Adds ``internal_cost`` (C1 scaled by the C6 factor of
+    ``extra_discounts``, pandas-path semantics: reference
+    calculate/service.py:206-209), ``internal_consumption``,
+    ``external_consumption`` and ``discount_amount``.
     """
-    return df.withColumns(_pricing_modes())
+    mapping = DEFAULT_EXTRA_DISCOUNTS if extra_discounts is None else extra_discounts
+    return df.withColumns(_pricing_modes(tuple(mapping.items())))
 
 
 @built_once
-def _pricing_modes() -> dict[str, Column]:
+def _pricing_modes(extra_discounts: tuple[tuple[str, float], ...]) -> dict[str, Column]:
+    # C1 (reference calculate/service.py:177-178; sql_template.py:101-102)
+    internal_consumption = F.col("cost") + F.col("internal_credits_consumption")
+
+    # J3: map-side literal lookup — a when-chain stays inside whole-stage
+    # codegen (no shuffle, no broadcast needed for a few dozen literals;
+    # the reference's overlay is ~24 accounts). Accounts are grouped by
+    # factor to keep the chain short, like the reference's dict-of-lists
+    # (calculate/service.py:189-199).
+    factor = F.lit(1.0)
+    by_factor: dict[float, list[str]] = {}
+    for acct, f in extra_discounts:
+        by_factor.setdefault(f, []).append(acct)
+    for f, accounts in by_factor.items():
+        factor = F.when(F.col("billing_account_id").isin(accounts), F.lit(float(f))).otherwise(
+            factor
+        )
+
     mode = F.col("mode")
     discount_d = F.col("discount").cast("double")
     price_d = F.col("price").cast("double")
@@ -108,7 +92,7 @@ def _pricing_modes() -> dict[str, Column]:
     credit_over_price = F.when(price4 != 0, credit_part / price4).otherwise(F.lit(0.0))
 
     external = (
-        F.when(mode == 1, F.col("internal_consumption") * discount_d)
+        F.when(mode == 1, internal_consumption * discount_d)
         .when(mode == 2, F.col("usage_amount_in_pricing_units") * price_d)
         .when(mode == 3, F.col("usage_amount_in_pricing_units") * price_d * discount_d)
         .when(mode == 4, F.col("cost_at_list") * disc4 + credit_over_price * disc4)
@@ -119,4 +103,9 @@ def _pricing_modes() -> dict[str, Column]:
         .when(mode == 4, credit_over_price)
         .otherwise(F.lit(0.0))
     )
-    return {"external_consumption": external, "discount_amount": discount_amount}
+    return {
+        "internal_cost": (F.col("cost") + F.col("internal_credits_cost")) * factor,
+        "internal_consumption": internal_consumption,
+        "external_consumption": external,
+        "discount_amount": discount_amount,
+    }

@@ -71,13 +71,13 @@ def dedupe_dim(dim: DataFrame) -> DataFrame:
 
 
 def _rule_map(dim: DataFrame) -> DataFrame:
-    """One row per (month, account) with its rules as a key -> payload map;
-    the rule number 1 + p + 2s + 4k from the NULL pattern is the
-    RULE_PATTERNS numbering. Keys must be unique (``dedupe_dim``)."""
+    """One row per (month, account) with its deduped rules (``dedupe_dim``:
+    map keys must be unique) as a key -> payload map; the rule number
+    1 + p + 2s + 4k from the NULL pattern is the RULE_PATTERNS numbering."""
     p, s, k = (F.col(c).isNotNull().cast("int") for c in WILDCARD_COLUMNS)
     key = F.struct((1 + p + 2 * s + 4 * k).alias("rule"), *WILDCARD_COLUMNS)
     entry = F.struct(key, F.struct(*RULE_COLUMNS))
-    return dim.groupBy(
+    return dedupe_dim(dim).groupBy(
         F.col("month").alias("__m"), F.col("billing_account_id").alias("__a")
     ).agg(F.map_from_entries(F.collect_list(entry)).alias("__rules"))
 
@@ -86,7 +86,6 @@ def _rule_map(dim: DataFrame) -> DataFrame:
 # runs over the same dim share ONE cached relation, not one orphan each, and a
 # hit skips building the dedupe and grouping plans — see _memo
 _DIM_CACHE: _memo.Registry = {}
-_DERIVE = {True: lambda dim: _rule_map(dedupe_dim(dim)), False: _rule_map}
 
 
 def release_dim_cache(spark=None) -> int:
@@ -97,11 +96,11 @@ def release_dim_cache(spark=None) -> int:
 
 
 @built_once
-def _lookups(month_col: str) -> tuple[Column, dict[str, Column], dict[str, Column]]:
+def _lookups() -> tuple[Column, dict[str, Column], dict[str, Column]]:
     """The join condition; the fact's key under each rule, looked up in its
     account's map (a NULL fact key in a column the rule needs gives a NULL
     lookup key); and the per-column priority coalesce (sql_template.py:93-98)."""
-    on = (F.col(month_col) == F.col("__m")) & (F.col("billing_account_id") == F.col("__a"))
+    on = (F.col("contract_month") == F.col("__m")) & (F.col("billing_account_id") == F.col("__a"))
     null, out = F.lit(None).cast("string"), {}
     for rule in PRIORITY:
         pattern = RULE_PATTERNS[rule]
@@ -112,20 +111,15 @@ def _lookups(month_col: str) -> tuple[Column, dict[str, Column], dict[str, Colum
     return on, out, {c: F.coalesce(*[F.col(f"__r{r}")[c] for r in PRIORITY]) for c in RULE_COLUMNS}
 
 
-def match_rules(
-    fact: DataFrame,
-    dim: DataFrame,
-    month_col: str = "contract_month",
-    dedupe: bool = True,
-    cache_dim: bool = True,
-) -> DataFrame:
+def match_rules(fact: DataFrame, dim: DataFrame, cache_dim: bool = True) -> DataFrame:
     """J1: attach the winning rule's payload columns to the fact.
 
-    ``fact`` must carry ``month_col`` ('YYYY-MM', reference main.py:34-36,
-    billing_calculation_service.py:129). Adds the 6 RULE_COLUMNS; ``discount``
-    and ``price`` stay loosely-typed strings exactly like the dim
-    (cast at use — reference calculate/service.py:51,61,70,87-88).
-    ``dedupe=False`` requires unique rule keys (a duplicate fails the map).
+    ``fact`` must carry ``contract_month`` ('YYYY-MM', reference
+    main.py:34-36, billing_calculation_service.py:129). Adds the 6
+    RULE_COLUMNS; ``discount`` and ``price`` stay loosely-typed strings
+    exactly like the dim (cast at use — reference
+    calculate/service.py:51,61,70,87-88). The dim is deduped first
+    (``dedupe_dim``).
 
     ``cache_dim`` materializes the rule map once per (session, input dim
     plan), as the reference loads the dim into driver memory once per run
@@ -133,9 +127,8 @@ def match_rules(
     it. The 8 lookups get their own projection: inlined into the 6
     coalesces they would not be shared.
     """
-    derive = _DERIVE[dedupe]
-    rules = _memo.memo_persist(dim, _DIM_CACHE, derive=derive) if cache_dim else derive(dim)
-    on, lookups, coalesced = _lookups(month_col)
+    rules = _memo.memo_persist(dim, _DIM_CACHE, derive=_rule_map) if cache_dim else _rule_map(dim)
+    on, lookups, coalesced = _lookups()
     return (
         fact.join(F.broadcast(rules), on=on, how="left")
         .withColumns(lookups)

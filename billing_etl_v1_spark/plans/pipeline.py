@@ -7,7 +7,7 @@ loop (main.py:85-133), 10k-row batch loop
 (calculate/sql_template.py:3-209) all collapse into
 
     scan -> filter(month/day) -> groupBy.agg -> 1 broadcast rule-map join
-         -> 8 rule lookups + coalesce -> pricing expressions -> conform
+         -> 8 rule lookups + coalesce -> one pricing projection -> conform
 
 Catalyst plans it; AQE handles skew (replacing the hardcoded heavy-account
 chunking, main.py:86-104). At 100 TB the only shuffle is the grain
@@ -31,11 +31,7 @@ from billing_etl_v1_spark.operators.aggregate import (
     source_aggregate,
 )
 from billing_etl_v1_spark.operators.conform import conform_to_target
-from billing_etl_v1_spark.operators.pricing import (
-    apply_extra_discount,
-    with_internal_measures,
-    with_pricing_modes,
-)
+from billing_etl_v1_spark.operators.pricing import with_pricing_modes
 from billing_etl_v1_spark.operators.rules import match_rules
 
 
@@ -70,14 +66,14 @@ def billing_pipeline(
     the reference, billing_calculation_service.py:354-371); ``grain='detail'``
     is the 13-key invoice-detail grain of the SQL template.
     """
+    # imported at call time, not at module load: a traced run swaps
+    # operators.aggregate.filter_day_range, and a name bound here at import
+    # would keep calling the original
     from billing_etl_v1_spark.operators.aggregate import (
         filter_day_range,
         filter_month,
     )
 
-    # the shared P3/P4 operators, not inline copies (review finding: the
-    # inline day filter required BOTH bounds, silently recomputing the
-    # whole month when an incremental caller passed only day_start)
     fact = filter_month(fact, invoice_month)
     fact = filter_day_range(fact, day_start, day_end)
 
@@ -89,8 +85,9 @@ def billing_pipeline(
     keys = DETAIL_KEYS if grain == "detail" else PIPELINE_KEYS
     agg = source_aggregate(with_contract_month(fact), keys=keys, extra_keys=["contract_month"])
 
-    matched = match_rules(agg, dim, month_col="contract_month")
-    priced = with_pricing_modes(
-        apply_extra_discount(with_internal_measures(matched), extra_discounts)
+    matched = match_rules(agg, dim)
+    return conform_to_target(
+        with_pricing_modes(matched, extra_discounts),
+        etl_time=etl_time,
+        include_etl_time=include_etl_time,
     )
-    return conform_to_target(priced, etl_time=etl_time, include_etl_time=include_etl_time)

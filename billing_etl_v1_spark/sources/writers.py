@@ -106,11 +106,6 @@ def write_calculated(
     df.write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 
-def append_calculated(df: DataFrame, path: str, partition_by=DEFAULT_PARTITIONING) -> None:
-    """D3: plain append (reference billing_calculation_service.py:427-431)."""
-    write_calculated(df, path, partition_by, mode="append")
-
-
 def read_calculated(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
@@ -181,10 +176,10 @@ def compact_partitions(
 ) -> None:
     """Small-file compaction for an append-heavy partitioned table.
 
-    Daily appends (append_calculated) leave one file per task per day; at
-    1000 executors that is thousands of KB-sized files per partition, and
-    scan/planning cost grows with file COUNT, not bytes. Compaction
-    MERGES small files: the table is rewritten into
+    Daily appends (``write_calculated(mode="append")``) leave one file per
+    task per day; at 1000 executors that is thousands of KB-sized files per
+    partition, and scan/planning cost grows with file COUNT, not bytes.
+    Compaction MERGES small files: the table is rewritten into
     max(ceil(total_bytes / target), one-per-partition) files via a
     partition-key repartition — the shuffle is one pass over the data and
     amortizes across every later scan. It is merge-ONLY by policy: a

@@ -10,11 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from billing_etl_v1_spark.operators.credits import credits_pivot
-from billing_etl_v1_spark.operators.pricing import (
-    apply_extra_discount,
-    with_internal_measures,
-    with_pricing_modes,
-)
+from billing_etl_v1_spark.operators.pricing import with_pricing_modes
 from billing_etl_v1_spark.operators.rules import dedupe_dim, match_rules
 
 DIM_DDL = (
@@ -160,9 +156,7 @@ def _priced(spark, mode, discount, price, credit_fields, extra=None, acct="A"):
     row = [acct, 10.0, 100.0, 120.0, -5.0, -3.0, -1.0, 0.0, -2.0, 0.0, 0.0, -2.0, 0.0, 0.0,
            mode, discount, price, credit_fields]
     df = spark.createDataFrame([tuple(row)], schema=PRICING_COLS)
-    df = with_internal_measures(df)
-    df = apply_extra_discount(df, extra or {})
-    return with_pricing_modes(df).collect()[0]
+    return with_pricing_modes(df, extra or {}).collect()[0]
 
 
 def test_mode1(spark):
@@ -295,6 +289,27 @@ def test_pipeline_memos_match_fresh_builds(spark):
         clear()
         assert run(kw) == got, kw
     assert len(warm[0]) > 0 and warm[0] != warm[1] and warm[0] != warm[2]
+
+
+def test_traced_run_patch_points_resolve(monkeypatch):
+    """perfbench's traced run swaps module attributes the pipeline looks up
+    at call time (``LAYER_PATCHES`` in perfbench/spans.py); renaming one
+    would break the traced run, which no untraced run notices."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "spans.py"
+    spec = importlib.util.spec_from_file_location("perfbench_spans", path)
+    spans = importlib.util.module_from_spec(spec)
+    # dataclasses look their defining module up in sys.modules
+    monkeypatch.setitem(sys.modules, spec.name, spans)
+    spec.loader.exec_module(spans)
+
+    assert spans.LAYER_PATCHES
+    for mod_name, attr, *_ in spans.LAYER_PATCHES:
+        target = getattr(importlib.import_module(mod_name), attr, None)
+        assert callable(target), f"{mod_name}.{attr}"
 
 
 def test_exact_sum_is_exact_signed_and_partition_order_proof(spark):
