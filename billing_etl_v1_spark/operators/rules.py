@@ -137,16 +137,6 @@ def match_rules(fact: DataFrame, dim: DataFrame, cache_dim: bool = True) -> Data
     )
 
 
-def restrict_dim_to_fact_accounts(dim: DataFrame, fact: DataFrame) -> DataFrame:
-    """J2/P9: the reference filters the dim to accounts present in the batch
-    with a driver-side ``isin`` (calculate/service.py:166-168). Distributed
-    form is a left-semi join; with a broadcast dim it is a no-op for
-    correctness, so this exists only as an exposed operator."""
-    return dim.join(
-        fact.select("billing_account_id").distinct(), on="billing_account_id", how="left_semi"
-    )
-
-
 def scd2_history(dim: DataFrame, include_current: bool = True) -> DataFrame:
     """Collapse the monthly contract-dim snapshots into SCD Type-2 history:
     one row per (rule key, version) with a [valid_from, valid_to] month

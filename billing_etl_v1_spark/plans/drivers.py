@@ -6,8 +6,8 @@ orchestration (SURVEY §2.9).
 'YYYYMM' — reference main.py:165-171); ``run_month`` is the monthly
 backfill (excute_month_task.py:167-200). Everything else the reference's
 drivers did — per-day loops, per-account loops, tmp-table swaps, manual
-deletes — is subsumed by the single DAG + dynamic partition overwrite,
-except that a window day with no output rows is not emptied (``run_daily``).
+deletes — is subsumed by the single DAG + dynamic partition overwrite
+(stale-day caveat: ``sources.writers.write_calculated``).
 No scheduler lives in the engine; any cron can call these.
 """
 
@@ -39,9 +39,7 @@ def run_daily(
     **pipeline_kwargs,
 ) -> tuple[str, dt.date, dt.date]:
     """Daily incremental run: compute the lookback window and overwrite
-    the day partitions the output contains. A window day with no output
-    rows is not a partition of the write, so it keeps whatever an earlier
-    run left there (see ``write_calculated``; ROADMAP.md open item 2)."""
+    the day partitions the output contains (``write_calculated``)."""
     invoice_month, day_start, day_end = daily_window(process_date, lookback_days)
     out = billing_pipeline(
         fact,
@@ -65,8 +63,7 @@ def run_month(
     """Monthly backfill: one DAG over the whole month, partition overwrite
     (stands in for the reference's delete tmp -> compute -> delete target ->
     merge sequence, excute_month_task.py:167-200). Like ``run_daily`` it
-    replaces only the day partitions the output contains; a day of the
-    month with no output rows keeps its old rows."""
+    replaces the day partitions the output contains."""
     out = billing_pipeline(fact, dim, invoice_month=invoice_month, **pipeline_kwargs)
     write_calculated(out, target_path)
     return invoice_month

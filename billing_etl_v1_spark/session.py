@@ -9,8 +9,8 @@ Every other config here is chosen for the 100 TB / 1000-executor posture:
   (reference main.py:86-104).
 - Partition-overwrite mode ``dynamic`` — an overwrite replaces only the
   partitions its output contains. It stands in for the reference's
-  delete-window-then-insert (reference main.py:177-201) but does not empty
-  window days that have no output rows (ROADMAP.md open item 2).
+  delete-window-then-insert (reference main.py:177-201); see
+  ``sources.writers.write_calculated`` for the stale-day caveat.
 - Arrow enabled for the few pandas-interop paths (multimodal UDFs).
 """
 
@@ -19,6 +19,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# runtime-settable confs the engine's results depend on. get_spark sets them
+# at build time; readers.harden_session re-applies them so queries also
+# behave correctly under a caller-provided vanilla session (the driver
+# harness builds its own SparkSession)
+REQUIRED_CONF = {
+    # deterministic epoch math in events operators + oracle agreement
+    "spark.sql.session.timeZone": "UTC",
+    # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
+    # type — read as long and convert (readers.load_table), truncating to
+    # micros exactly like DuckDB's ns->us coercion
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # keep partition column types as written ('199506' stays a string
+    # invoice_month on read-back, not an int)
+    "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+}
 
 
 def default_parallelism() -> int:
@@ -47,18 +63,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # keep partition column types as written ('199506' stays a string
-        # invoice_month on read-back, not an int)
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
-        # type — read as long and convert (readers.load_table), truncating to
-        # micros exactly like DuckDB's ns->us coercion
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**REQUIRED_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

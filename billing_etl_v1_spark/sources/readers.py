@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.session import REQUIRED_CONF
+
 TPCH_TABLES = [
     "region",
     "nation",
@@ -28,22 +30,8 @@ TPCH_TABLES = [
 ]
 
 
-# runtime-settable confs the engine's results depend on, applied defensively
-# so queries also behave correctly under a caller-provided vanilla session
-# (the driver harness builds its own SparkSession)
-_REQUIRED_RUNTIME_CONF = {
-    # deterministic epoch math in events operators + oracle agreement
-    "spark.sql.session.timeZone": "UTC",
-    # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos type — read
-    # as long, converted to micros in load_table (DuckDB coerces ns->us)
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # '199506' stays a string invoice_month on partitioned read-back
-    "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
-}
-
-
 def harden_session(spark: SparkSession) -> None:
-    for k, v in _REQUIRED_RUNTIME_CONF.items():
+    for k, v in REQUIRED_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -187,7 +175,7 @@ def read_csv_quarantine(
     Returns ``(good, bad)``: ``good`` has exactly ``schema``'s columns with
     every fully-parsed row; ``bad`` is ``(corrupt_record: string)`` holding
     the raw text of each row that failed to parse, ready for
-    ``writers.write_rows`` into a quarantine location. Use
+    ``writers.write_json`` into a quarantine location. Use
     :func:`read_csv` (FAILFAST) when a malformed row should stop the run;
     use this when a 100 TB backfill must survive row-level garbage and
     account for it afterwards.

@@ -7,12 +7,9 @@ The reference makes re-runs idempotent with:
 
 With dynamic partition overwrite (set in session.get_spark), one
 ``mode("overwrite")`` write replaces the partitions present in the incoming
-frame and leaves every other partition untouched. That is NOT the
-reference's window delete: a day in the run's window with no output rows
-(say, all of its usage restated away upstream) is not in the frame, so its
-stale rows survive the re-run. A re-run is idempotent only for the days it
-writes. Making the drivers replace the whole window is ROADMAP.md open
-item 2.
+frame and leaves every other partition untouched. That is not the
+reference's window delete; see ``write_calculated`` for the stale-day
+caveat.
 
 At 100 TB: partition by (invoice_month, usage_day) so daily increments touch
 only their own day partitions and month backfills replace one month
@@ -24,86 +21,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_PARTITIONING = ("invoice_month", "usage_day")
+PARTITION_COLUMNS = ("invoice_month", "usage_day")
+COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
-def _hashable_columns(df: DataFrame) -> list[str]:
-    """Column names whose types Spark's hash() accepts — MapType anywhere
-    in the type tree (top-level, array element, struct field) is not
-    hashable and must be excluded from salt expressions."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
+def write_calculated(df: DataFrame, path: str) -> None:
+    """D1+D2+D3 as one operation: cluster by the partition keys, then
+    overwrite the (invoice_month, usage_day) partitions present in ``df``.
 
-    def has_map(dt) -> bool:
-        if isinstance(dt, MapType):
-            return True
-        if isinstance(dt, ArrayType):
-            return has_map(dt.elementType)
-        if isinstance(dt, StructType):
-            return any(has_map(f.dataType) for f in dt.fields)
-        return False
+    Dynamic overwrite is NOT the reference's window delete: a day in a
+    run's window with no output rows (say, all of its usage restated away
+    upstream) is not in the frame, so its stale rows survive the re-run.
+    A re-run is idempotent only for the days it writes. Making the drivers
+    replace the whole window is ROADMAP.md open item 1.
 
-    return [f.name for f in df.schema.fields if not has_map(f.dataType)]
-
-
-def write_calculated(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = DEFAULT_PARTITIONING,
-    mode: str = "overwrite",
-    pre_shuffle: bool = True,
-    files_per_partition: int = 1,
-) -> None:
-    """D1+D2+D3 as one operation (dynamic overwrite replaces only the
-    partitions present in ``df``).
-
-    ``pre_shuffle`` clusters rows by the partition keys before the write so
-    each hive partition is produced by ``files_per_partition`` tasks instead
-    of by EVERY task that happens to hold its rows. Without it the file
-    count is O(tasks × partitions): measured at the 16× local scale
-    (9.1M output rows, 2499 day-partitions, 32 tasks) the naive write
-    produced 79,968 parquet files in 180s; pre-shuffled it is one file per
-    partition — the difference between a healthy table and a
-    planning-time disaster at 1000 executors. Raise ``files_per_partition``
-    when single partitions are too large for one task (adds a uniform salt
-    to the clustering key only — file layout, not row content).
-
-    Salt mechanics: hash of the HASHABLE non-partition columns mod N —
-    map-typed columns (top-level or nested) are excluded because Spark
-    cannot hash MapType (including one raised AnalysisException), and
-    partition columns are excluded because they are constant within a
-    partition and would dilute nothing. Byte-identical duplicate rows
-    share a salt, so fully-duplicated data still lands in one file per
-    partition regardless of N. If no such column exists the salt falls
-    back to hashing ``to_json(struct(<non-partition columns>))`` — slower
-    (serializes the row) but still DETERMINISTIC per row content. A
-    nondeterministic key (e.g. monotonically_increasing_id) is never
-    used: repartitioning on one can silently drop or duplicate rows when
-    a stage retry recomputes a map task after reducers consumed its
-    earlier output — Spark only repair-protects round-robin."""
-    if pre_shuffle and partition_by:
-        cols = [F.col(c) for c in partition_by]
-        if files_per_partition > 1:
-            hashable = [
-                c for c in _hashable_columns(df) if c not in set(partition_by)
-            ]
-            if hashable:
-                # deterministic spread: varies within a partition but not
-                # across reruns of identical data
-                salt = F.pmod(F.hash(*hashable), F.lit(files_per_partition))
-            else:
-                # every non-partition column is map-typed somewhere:
-                # hash() refuses maps, but to_json doesn't — deterministic
-                # per row content, which a shuffle key MUST be (retry
-                # safety), at the cost of serializing the row once
-                rest = [c for c in df.columns if c not in set(partition_by)]
-                salt = F.pmod(
-                    F.hash(F.to_json(F.struct(*rest))),
-                    F.lit(files_per_partition),
-                )
-            df = df.repartition(*cols, salt)
-        else:
-            df = df.repartition(*cols)
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    Clustering makes each hive partition the output of one task instead of
+    every task that happens to hold its rows. Without it the file count is
+    O(tasks × partitions): measured at the 16× local scale (9.1M output
+    rows, 2499 day-partitions, 32 tasks) the naive write produced 79,968
+    parquet files in 180s; clustered it is one file per partition — the
+    difference between a healthy table and a planning-time disaster at
+    1000 executors."""
+    df.repartition(*PARTITION_COLUMNS).write.mode("overwrite").partitionBy(
+        *PARTITION_COLUMNS
+    ).parquet(path)
 
 
 def read_calculated(spark: SparkSession, path: str) -> DataFrame:
@@ -168,27 +109,21 @@ def write_orc(
     w.orc(path)
 
 
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_by: tuple[str, ...] = DEFAULT_PARTITIONING,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> None:
-    """Small-file compaction for an append-heavy partitioned table.
+def compact_partitions(spark: SparkSession, path: str) -> None:
+    """Small-file compaction for a fragmented (invoice_month, usage_day)
+    partitioned table.
 
-    Daily appends (``write_calculated(mode="append")``) leave one file per
-    task per day; at 1000 executors that is thousands of KB-sized files per
-    partition, and scan/planning cost grows with file COUNT, not bytes.
+    ``write_calculated`` leaves one file per partition; fragmentation comes
+    from other writers (an external appender, a plain ``partitionBy`` write
+    without clustering), which leave one file per task per day. At 1000
+    executors that is thousands of KB-sized files per partition, and
+    scan/planning cost grows with file COUNT, not bytes.
     Compaction MERGES small files: the table is rewritten into
-    max(ceil(total_bytes / target), one-per-partition) files via a
+    max(ceil(total_bytes / 128 MiB), one-per-partition) files via a
     partition-key repartition — the shuffle is one pass over the data and
     amortizes across every later scan. It is merge-ONLY by policy: a
     layout already at or below that file count is left untouched (the
-    early return below), so it never splits few oversized files — an
-    oversized partition is a write-time decision
-    (``write_calculated(files_per_partition=N)``), because re-splitting
-    after the fact pays a full-table pass for a layout the writer could
-    have produced for free.
+    early return below), so it never splits few oversized files.
 
     Uses dynamic partition overwrite (session default) so a crash mid-
     compaction loses nothing: a partition is replaced atomically or not at
@@ -208,18 +143,17 @@ def compact_partitions(
                 n_current += 1
                 total += os.path.getsize(os.path.join(root, f))
                 parts.add(root)
-    n_files = max(1, math.ceil(total / target_file_bytes))
+    n_files = max(1, math.ceil(total / COMPACT_TARGET_FILE_BYTES))
     # a partitioned table cannot have fewer than one file per partition, so
-    # an already-compact layout (e.g. written by the pre-shuffling
-    # write_calculated) must be left alone — rewriting it is a full-table
-    # pass that changes nothing
+    # an already-compact layout (e.g. written by write_calculated) must be
+    # left alone — rewriting it is a full-table pass that changes nothing
     if n_current <= max(n_files, len(parts)):
         return
     # localCheckpoint materializes the rows and severs lineage to the input
     # files — required to overwrite the path being compacted (Spark refuses
     # a write whose plan still scans the destination)
-    compacted = df.repartition(n_files, *partition_by).localCheckpoint()
-    compacted.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    compacted = df.repartition(n_files, *PARTITION_COLUMNS).localCheckpoint()
+    compacted.write.mode("overwrite").partitionBy(*PARTITION_COLUMNS).parquet(path)
 
 
 def write_zordered(
@@ -421,6 +355,24 @@ def vacuum_versions(
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table_dir}/v={v}"), True)
         removed.append(v)
     return removed
+
+
+def _hashable_columns(df: DataFrame) -> list[str]:
+    """Column names with no MapType anywhere in the type tree (top-level,
+    array element, struct field). Maps are neither hashable nor
+    comparable, so ``snapshot_diff`` leaves them out of change detection."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    def has_map(dt) -> bool:
+        if isinstance(dt, MapType):
+            return True
+        if isinstance(dt, ArrayType):
+            return has_map(dt.elementType)
+        if isinstance(dt, StructType):
+            return any(has_map(f.dataType) for f in dt.fields)
+        return False
+
+    return [f.name for f in df.schema.fields if not has_map(f.dataType)]
 
 
 def snapshot_diff(

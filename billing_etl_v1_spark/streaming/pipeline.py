@@ -5,10 +5,12 @@ re-reading a fact table (main.py:207-215). These wrap the same operator
 logic for continuous ingest:
 
 - ``streaming_billing_ingest``: files land in a fact directory; each
-  micro-batch runs the SAME ``billing_pipeline`` via foreachBatch and
-  partition-overwrites only the partitions present in the batch —
-  exactly-once per partition on top of checkpointing, and zero duplicated
-  business logic between batch and streaming.
+  micro-batch recomputes every (invoice_month, usage_day) its files touch
+  from the WHOLE fact directory with the SAME ``billing_pipeline`` via
+  foreachBatch, and partition-overwrites those days. A day whose usage
+  spans micro-batches is priced over all of its rows, a retried batch
+  rewrites the same partitions, and no business logic is duplicated
+  between batch and streaming.
 - ``streaming_window_counts``: event-time tumbling windows with a watermark
   for late data — the streaming twin of operators.events.tumbling_window_agg.
 - ``streaming_sessionize``: custom stateful operator via
@@ -30,7 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from billing_etl_v1_spark.plans.pipeline import billing_pipeline
-from billing_etl_v1_spark.sources.writers import write_calculated
+from billing_etl_v1_spark.sources.writers import PARTITION_COLUMNS, write_calculated
 
 
 def _is_missing_path(exc: AnalysisException) -> bool:
@@ -96,7 +98,12 @@ def streaming_billing_ingest(
     extra_discounts: dict[str, float] | None = None,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """Continuous fact ingest -> calculated invoice partitions."""
+    """Continuous fact ingest -> calculated invoice partitions.
+
+    ``write_calculated`` replaces whole day partitions, so a batch cannot
+    be priced alone: it would erase the rows an earlier batch wrote for
+    the same day. Each batch instead re-reads ``fact_dir`` restricted
+    (null-safe left semi join) to the day pairs the batch touches."""
     reader = spark.readStream.schema(fact_schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -105,7 +112,14 @@ def streaming_billing_ingest(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = billing_pipeline(batch_df, dim, extra_discounts=extra_discounts)
+        days = batch_df.select(*PARTITION_COLUMNS).distinct()
+        fact = batch_df.sparkSession.read.schema(fact_schema).parquet(fact_dir)
+        touched = fact.join(
+            F.broadcast(days),
+            [fact[c].eqNullSafe(days[c]) for c in PARTITION_COLUMNS],
+            "left_semi",
+        )
+        out = billing_pipeline(touched, dim, extra_discounts=extra_discounts)
         write_calculated(out, target_path)
 
     return (

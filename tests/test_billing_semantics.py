@@ -393,27 +393,6 @@ def test_filter_month_and_day_range_semantics(spark, tmp_path):
     assert "PushedFilters" in plan and "invoice_month" in plan.split("PushedFilters", 1)[1].split("]", 1)[0], plan
 
 
-def test_restrict_dim_to_fact_accounts_is_semi_join(spark):
-    """J2/P9: dim restricted to the batch's accounts via LEFT SEMI — keeps
-    every dim row for present accounts (including duplicates), drops absent
-    accounts, and NEVER amplifies rows no matter how many fact rows share
-    an account (the hazard of an inner-join formulation)."""
-    from billing_etl_v1_spark.operators.rules import restrict_dim_to_fact_accounts
-
-    dim = spark.createDataFrame(
-        [("A", 1), ("A", 2), ("B", 3), ("C", 4)],
-        "billing_account_id string, rule int",
-    )
-    fact = spark.createDataFrame(
-        [("A",), ("A",), ("A",), ("B",)], "billing_account_id string"
-    )
-    out = restrict_dim_to_fact_accounts(dim, fact)
-    got = sorted((r.billing_account_id, r.rule) for r in out.collect())
-    assert got == [("A", 1), ("A", 2), ("B", 3)]  # C dropped, A not amplified
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, plan
-
-
 def test_conform_strict_fails_loud_permissive_quarantines(spark):
     """Type GARBAGE at the conformance boundary (a string in a numeric
     column, an unparseable usage_day — distinct from NULLs): the default

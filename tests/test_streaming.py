@@ -48,6 +48,44 @@ def test_streaming_billing_ingest_matches_batch(spark, tmp_path):
     assert stream_rows == batch_rows > 0
 
 
+def test_streaming_billing_ingest_day_split_across_batches(spark, tmp_path):
+    """A day whose usage arrives in two micro-batches must be priced over
+    all of its rows. Each batch overwrites whole day partitions, so a batch
+    priced alone would erase what an earlier batch wrote for the same day."""
+    from billing_etl_v1_spark.operators.aggregate import DETAIL_KEYS
+    from billing_etl_v1_spark.plans.pipeline import billing_pipeline
+
+    register_views(spark, SF_SMALL, ["lineitem"])
+    fact = synthetic.fact_df(spark).filter("invoice_month = '199506'")
+    dim = synthetic.dim_df(spark)
+
+    # two files, split by account parity: every day has rows in both
+    fact_dir = str(tmp_path / "fact_in")
+    parity = F.pmod(F.hash("billing_account_id"), F.lit(2))
+    for half in (0, 1):
+        fact.filter(parity == half).coalesce(1).write.mode("append").parquet(fact_dir)
+    schema = spark.read.parquet(fact_dir).schema
+
+    target = str(tmp_path / "calc_out")
+    q = streaming_billing_ingest(
+        spark,
+        fact_dir,
+        schema,
+        dim,
+        target,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(120)
+
+    cols = [F.col(c).cast("string") for c in DETAIL_KEYS] + ["cost"]
+    batch = billing_pipeline(fact, dim, include_etl_time=False).select(*cols)
+    streamed = read_calculated(spark, target).select(*cols)
+    assert streamed.count() == batch.count() > 0
+    assert streamed.exceptAll(batch).isEmpty()
+    assert batch.exceptAll(streamed).isEmpty()
+
+
 def test_streaming_window_counts_matches_batch(spark, tmp_path):
     events = load_table(spark, SF_SMALL, "events")
     events_dir = str(tmp_path / "events_in")

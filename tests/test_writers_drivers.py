@@ -147,10 +147,7 @@ def test_json_roundtrip_preserves_arrays(spark, tmp_path):
 
 
 def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
-    from billing_etl_v1_spark.sources.writers import (
-        compact_partitions,
-        write_calculated,
-    )
+    from billing_etl_v1_spark.sources.writers import compact_partitions
     import os
 
     path = str(tmp_path / "compact_me")
@@ -159,13 +156,13 @@ def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
         "date_add(DATE '1995-06-01', CAST(id % 3 AS INT)) AS usage_day",
         "id AS v",
     )
-    # simulate a NAIVE appender (pre_shuffle off — e.g. an external tool):
+    # simulate a NAIVE appender (no clustering — e.g. an external tool):
     # 4 appends x 32 tasks x 3 partitions -> hundreds of small files, the
     # fragmentation compact_partitions exists to repair
     for _ in range(4):
-        write_calculated(
-            base.repartition(32), path, mode="append", pre_shuffle=False
-        )
+        base.repartition(32).write.mode("append").partitionBy(
+            "invoice_month", "usage_day"
+        ).parquet(path)
 
     def parquet_files():
         return [
@@ -188,11 +185,11 @@ def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
 
 
 def test_write_calculated_preshuffle_one_file_per_partition(spark, tmp_path):
-    """The default write must not explode into O(tasks x partitions) files:
+    """The write must not explode into O(tasks x partitions) files:
     pre-shuffling by the partition keys yields exactly one parquet file per
     hive partition no matter how the incoming frame is partitioned
     (measured naive layout at 16x local scale: 79,968 files for 2,499
-    partitions); files_per_partition=N bounds the spread at N."""
+    partitions)."""
     import os
 
     from billing_etl_v1_spark.sources.writers import write_calculated
@@ -215,17 +212,7 @@ def test_write_calculated_preshuffle_one_file_per_partition(spark, tmp_path):
     write_calculated(base, p1)
     layout = files_by_dir(p1)
     assert len(layout) == 3 and set(layout.values()) == {1}, layout
-
-    # files_per_partition is an UPPER bound on spread: the salt splits the
-    # clustering key, but AQE legitimately coalesces small shuffle
-    # partitions back together (at real scale partitions exceed the
-    # advisory size and do spread) — so assert the bound, not a minimum
-    p2 = str(tmp_path / "spread")
-    write_calculated(base, p2, files_per_partition=4)
-    layout2 = files_by_dir(p2)
-    assert len(layout2) == 3 and all(1 <= n <= 4 for n in layout2.values()), layout2
-    # same rows either way
-    assert spark.read.parquet(p2).count() == spark.read.parquet(p1).count() == 2000
+    assert spark.read.parquet(p1).count() == 2000
 
 
 def test_compact_partitions_skips_already_compact_layout(spark, tmp_path):
@@ -261,34 +248,6 @@ def test_compact_partitions_skips_already_compact_layout(spark, tmp_path):
     before = file_states()
     compact_partitions(spark, path)
     assert file_states() == before  # same paths, same mtimes, same bytes
-
-
-def test_write_calculated_salt_tolerates_map_columns(spark, tmp_path):
-    """files_per_partition>1 must not feed MapType columns into hash()
-    (Spark cannot hash maps — this raised AnalysisException before the
-    salt filtered to hashable columns)."""
-    from billing_etl_v1_spark.sources.writers import write_calculated
-
-    base = spark.range(0, 200).selectExpr(
-        "'199506' AS invoice_month",
-        "date_add(DATE '1995-06-01', CAST(id % 2 AS INT)) AS usage_day",
-        "map('k', id) AS props",
-        "id AS v",
-    )
-    path = str(tmp_path / "map_salt")
-    write_calculated(base, path, files_per_partition=4)
-    assert spark.read.parquet(path).count() == 200
-
-    # degenerate frame: every non-partition column is a map -> the
-    # deterministic to_json(struct) salt fallback
-    base2 = spark.range(0, 200).selectExpr(
-        "'199506' AS invoice_month",
-        "DATE '1995-06-01' AS usage_day",
-        "map('k', id) AS props",
-    ).select("props", "invoice_month", "usage_day")
-    path2 = str(tmp_path / "map_only_salt")
-    write_calculated(base2, path2, files_per_partition=2)
-    assert spark.read.parquet(path2).count() == 200
 
 
 def test_cli_month_backfill_end_to_end(spark, tmp_path, monkeypatch):
