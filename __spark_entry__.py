@@ -46,7 +46,7 @@ from billing_etl_v1_spark.operators.rules import (
     match_rules,
     scd2_history,
 )
-from billing_etl_v1_spark.plans.pipeline import billing_pipeline, with_contract_month
+from billing_etl_v1_spark.plans.pipeline import billing_pipeline
 from billing_etl_v1_spark.sources import synthetic
 from billing_etl_v1_spark.sources.readers import register_views
 
@@ -127,10 +127,7 @@ def _q_dim_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _matched_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact, dim = _billing_ctx(spark, sf_dir)
     fact = fact.filter(F.col("invoice_month") == oracle.FLAGSHIP_MONTH)
-    agg = agg_ops.source_aggregate(
-        with_contract_month(fact), keys=agg_ops.DETAIL_KEYS, extra_keys=["contract_month"]
-    )
-    return match_rules(agg, dim)
+    return match_rules(agg_ops.source_aggregate(fact, keys=agg_ops.DETAIL_KEYS), dim)
 
 
 def _q_billing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -64,16 +64,11 @@ SUM_MEASURES = [
 ]
 
 
-def source_aggregate(
-    fact: DataFrame,
-    keys: list[str] | None = None,
-    extra_keys: list[str] | None = None,
-) -> DataFrame:
+def source_aggregate(fact: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """A1/A2: hash group-by over the fact grain with 13 SUM measures.
 
-    ``extra_keys`` lets callers thread helper columns (e.g. contract_month)
-    through the aggregation as grouping keys without changing the grain —
-    contract_month is functionally dependent on invoice_month.
+    Groups on exactly ``keys`` (default PIPELINE_KEYS); the contract month
+    is derived from invoice_month in the rule join (``rules.match_rules``).
 
     Accumulation contract: each double is quantized to an exact 1e-10
     integer grid (round half toward +inf) and summed as a sign-safe
@@ -88,8 +83,7 @@ def source_aggregate(
     whole-table rollup/cube totals keep the DECIMAL path. Downstream
     pricing math stays double, like the reference's float pipeline.
     """
-    keys = list(keys or PIPELINE_KEYS) + list(extra_keys or [])
-    return fact.groupBy(*keys).agg(*_exact_sums())
+    return fact.groupBy(*(keys or PIPELINE_KEYS)).agg(*_exact_sums())
 
 
 @built_once

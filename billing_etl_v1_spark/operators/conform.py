@@ -32,20 +32,13 @@ def conform_to_target(
     df: DataFrame,
     etl_time: _dt.datetime | None = None,
     include_etl_time: bool = True,
-    strict: bool = True,
 ) -> DataFrame:
     """Project onto the exact 37-column target schema with reference defaults.
 
-    ``strict`` controls what happens to type GARBAGE (a string 'abc' in a
-    numeric column, '2024-99-99' in usage_day — distinct from NULLs, which
-    the coalesce defaults always absorb): strict=True (default, the
-    verified reference behavior) uses plain casts, so under ANSI mode one
-    malformed value fails the job loudly at the conformance boundary;
-    strict=False is the 100 TB quarantine mode — try_cast turns garbage
-    into NULL, which then takes the same type-appropriate default as a
-    missing value ('' / 0.0 / 0, NULL preserved for the nullable pair),
-    so one poisoned row cannot kill a day-long backfill."""
-    cols = _target_columns(tuple(df.columns), strict)
+    NULLs take the type-appropriate defaults; type GARBAGE (a string 'abc'
+    in a numeric column, '2024-99-99' in usage_day) meets a plain cast, so
+    under ANSI mode one malformed value fails the job loudly here."""
+    cols = _target_columns(tuple(df.columns))
     if not include_etl_time:
         return df.select(*[c for c in cols if c is not None])
     etl = F.lit(etl_time).cast("timestamp") if etl_time else F.current_timestamp()
@@ -53,13 +46,9 @@ def conform_to_target(
 
 
 @built_once
-def _target_columns(present: tuple[str, ...], strict: bool) -> list[Column | None]:
+def _target_columns(present: tuple[str, ...]) -> list[Column | None]:
     """The target projection of a frame with columns ``present``; None
     stands for etl_time, which is a per-run value."""
-
-    def _cast(c: Column, t: str) -> Column:
-        return c.cast(t) if strict else c.try_cast(t)
-
     out: list[Column | None] = []
     for name in TARGET_COLUMNS:
         if name == "etl_time":
@@ -70,10 +59,10 @@ def _target_columns(present: tuple[str, ...], strict: bool) -> list[Column | Non
             # month-grain rollup legitimately has no day column), not an
             # UNRESOLVED_COLUMN crash (review finding)
             base = F.col(name) if name in present else F.lit(None)
-            col = _cast(base, "date")
+            col = base.cast("date")
         elif name == "mode":
             base = F.col(name) if name in present else F.lit(None)
-            col = F.coalesce(_cast(base, "int"), F.lit(0))
+            col = F.coalesce(base.cast("int"), F.lit(0))
         elif name in TARGET_NULLABLE_STRING_COLUMNS:
             col = (F.col(name) if name in present else F.lit(None)).cast("string")
         elif name in TARGET_STRING_COLUMNS:
@@ -81,7 +70,7 @@ def _target_columns(present: tuple[str, ...], strict: bool) -> list[Column | Non
             col = F.coalesce(base.cast("string"), F.lit(""))
         elif name in TARGET_NUMERIC_COLUMNS:
             base = F.col(name) if name in present else F.lit(None)
-            col = F.coalesce(_cast(base, "double"), F.lit(0.0))
+            col = F.coalesce(base.cast("double"), F.lit(0.0))
         else:  # pragma: no cover - exhaustive above
             col = F.col(name)
         out.append(col.alias(name))

@@ -99,8 +99,13 @@ def release_dim_cache(spark=None) -> int:
 def _lookups() -> tuple[Column, dict[str, Column], dict[str, Column]]:
     """The join condition; the fact's key under each rule, looked up in its
     account's map (a NULL fact key in a column the rule needs gives a NULL
-    lookup key); and the per-column priority coalesce (sql_template.py:93-98)."""
-    on = (F.col("contract_month") == F.col("__m")) & (F.col("billing_account_id") == F.col("__a"))
+    lookup key); and the per-column priority coalesce (sql_template.py:93-98).
+    The join turns invoice_month 'YYYYMM' into the dim's contract month
+    'YYYY-MM' (reference main.py:34-36, billing_calculation_service.py:129)."""
+    month = F.concat(
+        F.substring("invoice_month", 1, 4), F.lit("-"), F.substring("invoice_month", 5, 2)
+    )
+    on = (month == F.col("__m")) & (F.col("billing_account_id") == F.col("__a"))
     null, out = F.lit(None).cast("string"), {}
     for rule in PRIORITY:
         pattern = RULE_PATTERNS[rule]
@@ -114,7 +119,8 @@ def _lookups() -> tuple[Column, dict[str, Column], dict[str, Column]]:
 def match_rules(fact: DataFrame, dim: DataFrame, cache_dim: bool = True) -> DataFrame:
     """J1: attach the winning rule's payload columns to the fact.
 
-    ``fact`` must carry ``contract_month`` ('YYYY-MM', reference
+    ``fact`` must carry ``invoice_month`` ('YYYYMM'); the join matches it
+    to the dim's ``month`` ('YYYY-MM') as the contract month (reference
     main.py:34-36, billing_calculation_service.py:129). Adds the 6
     RULE_COLUMNS; ``discount`` and ``price`` stay loosely-typed strings
     exactly like the dim (cast at use — reference

@@ -6,8 +6,12 @@ loop (main.py:85-133), 10k-row batch loop
 (billing_calculation_service.py:450-462) and the ClickHouse SQL template
 (calculate/sql_template.py:3-209) all collapse into
 
-    scan -> filter(month/day) -> groupBy.agg -> 1 broadcast rule-map join
+    scan -> filter(month/day) -> groupBy.agg
+         -> 1 broadcast rule-map join on (contract month, account)
          -> 8 rule lookups + coalesce -> one pricing projection -> conform
+
+The contract month ('YYYY-MM') is not a column of the pipeline: the rule
+join derives it from invoice_month (``operators.rules.match_rules``).
 
 Catalyst plans it; AQE handles skew (replacing the hardcoded heavy-account
 chunking, main.py:86-104). At 100 TB the only shuffle is the grain
@@ -21,10 +25,8 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from billing_etl_v1_spark.functions import built_once
 from billing_etl_v1_spark.operators.aggregate import (
     DETAIL_KEYS,
     PIPELINE_KEYS,
@@ -33,19 +35,6 @@ from billing_etl_v1_spark.operators.aggregate import (
 from billing_etl_v1_spark.operators.conform import conform_to_target
 from billing_etl_v1_spark.operators.pricing import with_pricing_modes
 from billing_etl_v1_spark.operators.rules import match_rules
-
-
-def with_contract_month(df: DataFrame) -> DataFrame:
-    """F6: 'YYYYMM' -> 'YYYY-MM' (reference main.py:34-36,
-    billing_calculation_service.py:129)."""
-    return df.withColumn("contract_month", _contract_month())
-
-
-@built_once
-def _contract_month() -> Column:
-    return F.concat(
-        F.substring("invoice_month", 1, 4), F.lit("-"), F.substring("invoice_month", 5, 2)
-    )
 
 
 def billing_pipeline(
@@ -83,9 +72,7 @@ def billing_pipeline(
             f"here would otherwise silently aggregate at the wrong grain"
         )
     keys = DETAIL_KEYS if grain == "detail" else PIPELINE_KEYS
-    agg = source_aggregate(with_contract_month(fact), keys=keys, extra_keys=["contract_month"])
-
-    matched = match_rules(agg, dim)
+    matched = match_rules(source_aggregate(fact, keys=keys), dim)
     return conform_to_target(
         with_pricing_modes(matched, extra_discounts),
         etl_time=etl_time,

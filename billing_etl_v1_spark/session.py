@@ -7,10 +7,6 @@ Every other config here is chosen for the 100 TB / 1000-executor posture:
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting) —
   replaces the reference's hand-coded heavy-account chunking
   (reference main.py:86-104).
-- Partition-overwrite mode ``dynamic`` — an overwrite replaces only the
-  partitions its output contains. It stands in for the reference's
-  delete-window-then-insert (reference main.py:177-201); see
-  ``sources.writers.write_calculated`` for the stale-day caveat.
 - Arrow enabled for the few pandas-interop paths (multimodal UDFs).
 """
 
@@ -62,7 +58,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

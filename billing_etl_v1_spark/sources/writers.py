@@ -5,11 +5,12 @@ The reference makes re-runs idempotent with:
   ALTER TABLE ... DELETE WHERE invoice_month=... (main.py:177-183,186-192)
   INSERT INTO target SELECT FROM tmp WHERE window  (main.py:195-201)
 
-With dynamic partition overwrite (set in session.get_spark), one
-``mode("overwrite")`` write replaces the partitions present in the incoming
-frame and leaves every other partition untouched. That is not the
-reference's window delete; see ``write_calculated`` for the stale-day
-caveat.
+Each partitioned overwrite here states ``partitionOverwriteMode=dynamic``
+on its own writer, so under any session one ``mode("overwrite")`` write
+replaces the partitions present in the incoming frame and leaves every
+other partition untouched (under the session default, ``static``, it
+would erase the whole table first). That is not the reference's window
+delete; see ``write_calculated`` for the stale-day caveat.
 
 At 100 TB: partition by (invoice_month, usage_day) so daily increments touch
 only their own day partitions and month backfills replace one month
@@ -27,7 +28,9 @@ COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 def write_calculated(df: DataFrame, path: str) -> None:
     """D1+D2+D3 as one operation: cluster by the partition keys, then
-    overwrite the (invoice_month, usage_day) partitions present in ``df``.
+    overwrite the (invoice_month, usage_day) partitions present in ``df``
+    (dynamic partition overwrite, set on this writer whatever the
+    session's default).
 
     Dynamic overwrite is NOT the reference's window delete: a day in a
     run's window with no output rows (say, all of its usage restated away
@@ -42,9 +45,13 @@ def write_calculated(df: DataFrame, path: str) -> None:
     parquet files in 180s; clustered it is one file per partition — the
     difference between a healthy table and a planning-time disaster at
     1000 executors."""
-    df.repartition(*PARTITION_COLUMNS).write.mode("overwrite").partitionBy(
-        *PARTITION_COLUMNS
-    ).parquet(path)
+    (
+        df.repartition(*PARTITION_COLUMNS)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*PARTITION_COLUMNS)
+        .parquet(path)
+    )
 
 
 def read_calculated(spark: SparkSession, path: str) -> DataFrame:
@@ -102,10 +109,11 @@ def write_orc(
 ) -> None:
     """ORC sink (Spark-native columnar; nested types, compression, and
     partition directories exactly like the parquet sinks — for consumers
-    whose warehouse standardizes on ORC rather than parquet)."""
+    whose warehouse standardizes on ORC rather than parquet). A partitioned
+    overwrite replaces only the partitions present in ``df``."""
     w = df.write.mode(mode)
     if partition_by:
-        w = w.partitionBy(*partition_by)
+        w = w.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
     w.orc(path)
 
 
@@ -125,24 +133,26 @@ def compact_partitions(spark: SparkSession, path: str) -> None:
     layout already at or below that file count is left untouched (the
     early return below), so it never splits few oversized files.
 
-    Uses dynamic partition overwrite (session default) so a crash mid-
+    Uses dynamic partition overwrite (set on its writer) so a crash mid-
     compaction loses nothing: a partition is replaced atomically or not at
     all, and re-running is idempotent — same delete-nothing safety the
     reference's tmp-table swap aimed for (reference main.py:172-201).
+    ``path`` may be any Hadoop path (local, ``file://``, ``hdfs://``, ...).
     """
     import math
-    import os
 
     df = spark.read.parquet(path)
-    # sizing from the file index — no data read; per-partition skew in the
-    # rewrite shuffle is handled by AQE coalescing
+    # sizing from the file listing — no data read; per-partition skew in
+    # the rewrite shuffle is handled by AQE coalescing
+    fs, hpath = _hadoop_fs(spark, path)
     total, n_current, parts = 0, 0, set()
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                n_current += 1
-                total += os.path.getsize(os.path.join(root, f))
-                parts.add(root)
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        st = files.next()
+        if st.getPath().getName().endswith(".parquet"):
+            n_current += 1
+            total += st.getLen()
+            parts.add(st.getPath().getParent().toString())
     n_files = max(1, math.ceil(total / COMPACT_TARGET_FILE_BYTES))
     # a partitioned table cannot have fewer than one file per partition, so
     # an already-compact layout (e.g. written by write_calculated) must be
@@ -153,7 +163,12 @@ def compact_partitions(spark: SparkSession, path: str) -> None:
     # files — required to overwrite the path being compacted (Spark refuses
     # a write whose plan still scans the destination)
     compacted = df.repartition(n_files, *PARTITION_COLUMNS).localCheckpoint()
-    compacted.write.mode("overwrite").partitionBy(*PARTITION_COLUMNS).parquet(path)
+    (
+        compacted.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*PARTITION_COLUMNS)
+        .parquet(path)
+    )
 
 
 def write_zordered(

@@ -490,6 +490,7 @@ def streaming_scd2_maintenance(
         hist = scd2_history(affected, include_current=False)
         (
             hist.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(SCD2_KEY)
             .parquet(history_store)
         )
@@ -788,7 +789,7 @@ def compact_word_store(spark: SparkSession, word_store: str) -> None:
     ``batch_id=-1`` partition — partition discovery and file count stop
     growing with stream lifetime.
 
-    Static whole-table overwrite (not the dynamic-mode default): the point
+    Static whole-table overwrite (stated on its writer): the point
     is to DROP the per-batch partitions, not overwrite them in place. A
     crash mid-compaction can lose store rows, which is the store's
     documented failure budget — a lost word re-encodes in a later batch;

@@ -26,13 +26,13 @@ def _dim(spark, rows):
 
 def _fact(spark, rows):
     ddl = (
-        "contract_month string, billing_account_id string, project_id string, "
+        "invoice_month string, billing_account_id string, project_id string, "
         "service_description string, sku_id string"
     )
     return spark.createDataFrame(rows, schema=ddl)
 
 
-FACT_ROW = ("2026-01", "A", "p1", "s1", "k1")
+FACT_ROW = ("202601", "A", "p1", "s1", "k1")
 
 
 def test_priority_8_beats_1(spark):
@@ -395,10 +395,8 @@ def test_filter_month_and_day_range_semantics(spark, tmp_path):
 
 def test_conform_strict_fails_loud_permissive_quarantines(spark):
     """Type GARBAGE at the conformance boundary (a string in a numeric
-    column, an unparseable usage_day — distinct from NULLs): the default
-    strict mode must fail the job loudly under ANSI, and strict=False
-    must quarantine the bad value to the same type-appropriate default a
-    missing value gets, so one poisoned row can't kill a long backfill."""
+    column, an unparseable usage_day — distinct from NULLs) must fail the
+    job loudly under ANSI."""
     import pytest
 
     from billing_etl_v1_spark.operators.conform import conform_to_target
@@ -409,15 +407,6 @@ def test_conform_strict_fails_loud_permissive_quarantines(spark):
     )
     with pytest.raises(Exception, match="CAST_INVALID_INPUT|ANSI|Cannot cast|DateTimeException|CANNOT_PARSE"):
         conform_to_target(df, include_etl_time=False).collect()
-
-    rows = {
-        str(r.usage_day): r
-        for r in conform_to_target(df, include_etl_time=False, strict=False).collect()
-    }
-    good = rows["2024-03-01"]
-    assert good.mode == 3 and good.cost == 1.5
-    bad = rows["None"]
-    assert bad.mode == 0 and bad.cost == 0.0
 
 
 def test_credits_pivot_null_amount_contributes_zero_everywhere(spark):
@@ -474,6 +463,23 @@ def test_billing_pipeline_rejects_unknown_grain(spark):
     with pytest.raises(ValueError, match="grain"):
         billing_pipeline(fact, dim, grain="details")  # typo must not
         # silently select the coarser production grain
+
+
+def test_billing_pipeline_output_matches_target_schema(spark):
+    """At both grains the pipeline emits the target table's columns
+    (``schemas.TARGET_SCHEMA``) in its order and with its types."""
+    import datetime as dt
+
+    import __spark_entry__ as em
+    from billing_etl_v1_spark.plans.pipeline import billing_pipeline
+    from billing_etl_v1_spark.schemas import TARGET_SCHEMA
+    from tests.conftest import SF_SMALL
+
+    fact, dim = em._billing_ctx(spark, SF_SMALL)
+    want = [(f.name, f.dataType) for f in TARGET_SCHEMA]
+    for grain in ("detail", "pipeline"):
+        out = billing_pipeline(fact, dim, grain=grain, etl_time=dt.datetime(2026, 1, 2))
+        assert [(f.name, f.dataType) for f in out.schema] == want, grain
 
 
 def test_conform_defaults_missing_usage_day(spark):

@@ -130,8 +130,16 @@ def test_rule_match_agrees_with_pandas_model(spark, rules, fact):
         "price string, credit_fields string, customer_id string, contract_id string",
     )
     fact_df = spark.createDataFrame(
-        [(MONTH, "ACCT-P", fact["project_id"], fact["service_description"], fact["sku_id"])],
-        "contract_month string, billing_account_id string, project_id string, "
+        [
+            (
+                MONTH.replace("-", ""),
+                "ACCT-P",
+                fact["project_id"],
+                fact["service_description"],
+                fact["sku_id"],
+            )
+        ],
+        "invoice_month string, billing_account_id string, project_id string, "
         "service_description string, sku_id string",
     )
     got = match_rules(fact_df, dim, cache_dim=False).collect()[0]

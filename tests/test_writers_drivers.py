@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from billing_etl_v1_spark.plans.drivers import daily_window, run_daily, run_month
@@ -37,22 +38,32 @@ def test_default_parallelism_env_then_usable_cores(monkeypatch):
     assert default_parallelism() == len(os.sched_getaffinity(0))
 
 
-def test_month_overwrite_is_idempotent_and_partition_scoped(spark, tmp_path):
-    fact, dim = _ctx(spark)
-    target = str(tmp_path / "calculated")
+@pytest.mark.parametrize("session_mode", ["dynamic", "static"])
+def test_month_overwrite_is_idempotent_and_partition_scoped(spark, tmp_path, session_mode):
+    """The sink states its own overwrite mode: under a session whose
+    default is static (Spark's own default), a month run must still leave
+    the other months' partitions in place."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, session_mode)
+    try:
+        fact, dim = _ctx(spark)
+        target = str(tmp_path / "calculated")
 
-    run_month(fact, dim, target, "199506", include_etl_time=False)
-    run_month(fact, dim, target, "199507", include_etl_time=False)
-    first = read_calculated(spark, target)
-    counts = dict(
-        first.groupBy("invoice_month").count().collect()
-    )
-    assert set(counts) == {"199506", "199507"}
+        run_month(fact, dim, target, "199506", include_etl_time=False)
+        run_month(fact, dim, target, "199507", include_etl_time=False)
+        first = read_calculated(spark, target)
+        counts = dict(
+            first.groupBy("invoice_month").count().collect()
+        )
+        assert set(counts) == {"199506", "199507"}
 
-    # re-run one month: its partitions are replaced, the other untouched
-    run_month(fact, dim, target, "199506", include_etl_time=False)
-    again = dict(read_calculated(spark, target).groupBy("invoice_month").count().collect())
-    assert again == counts  # no duplication => delete-then-insert semantics
+        # re-run one month: its partitions are replaced, the other untouched
+        run_month(fact, dim, target, "199506", include_etl_time=False)
+        again = dict(read_calculated(spark, target).groupBy("invoice_month").count().collect())
+        assert again == counts  # no duplication => delete-then-insert semantics
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_daily_overwrites_only_window_days(spark, tmp_path):
@@ -146,9 +157,11 @@ def test_json_roundtrip_preserves_arrays(spark, tmp_path):
     assert got["a"] == [1.0, 2.5]
 
 
-def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path, scheme):
+    """Compaction sizes the table through the Hadoop FS API, so a URI path
+    compacts exactly like a plain local one."""
     from billing_etl_v1_spark.sources.writers import compact_partitions
-    import os
 
     path = str(tmp_path / "compact_me")
     base = spark.range(0, 2000).selectExpr(
@@ -176,7 +189,7 @@ def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
     total_before = spark.read.parquet(path).count()
     sum_before = spark.read.parquet(path).agg({"v": "sum"}).first()[0]
 
-    compact_partitions(spark, path)
+    compact_partitions(spark, scheme + path)
 
     after = len(parquet_files())
     assert after < before / 4
