@@ -44,6 +44,7 @@ from billing_etl_v1_spark.operators.rules import (
     RULE_COLUMNS,
     dedupe_dim,
     match_rules,
+    rule_number,
     scd2_history,
 )
 from billing_etl_v1_spark.plans.pipeline import billing_pipeline
@@ -110,18 +111,7 @@ def _q_distinct_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dim_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, dim = _billing_ctx(spark, sf_dir)
-    p, s, k = (F.col(c).isNotNull() for c in ("project_id", "service_description", "sku_id"))
-    rule = (
-        F.when(~p & ~s & ~k, 1)
-        .when(p & ~s & ~k, 2)
-        .when(~p & s & ~k, 3)
-        .when(p & s & ~k, 4)
-        .when(~p & ~s & k, 5)
-        .when(p & ~s & k, 6)
-        .when(~p & s & k, 7)
-        .otherwise(8)
-    )
-    return dedupe_dim(dim).withColumn("rule", rule)
+    return dedupe_dim(dim).withColumn("rule", rule_number())
 
 
 def _matched_detail(spark: SparkSession, sf_dir: str) -> DataFrame:

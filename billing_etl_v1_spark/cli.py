@@ -43,7 +43,6 @@ def build_parser() -> argparse.ArgumentParser:
         default=None,
         help="process date YYYY-MM-DD (default: today UTC, like the cron)",
     )
-    daily.add_argument("--lookback-days", type=int, default=4)
 
     month = sub.add_parser("month", help="whole-month backfill")
     common(month)
@@ -234,10 +233,19 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from billing_etl_v1_spark.plans.drivers import run_daily, run_month
     from billing_etl_v1_spark.session import get_spark
 
     spark = get_spark("billing-etl-cli")
+    try:
+        return _run(spark, args)
+    finally:
+        spark.stop()
+
+
+def _run(spark, args: argparse.Namespace) -> int:
+    """Dispatch one parsed command on ``spark``; returns the exit code."""
+    from billing_etl_v1_spark.plans.drivers import run_daily, run_month
+
     if args.command == "sql":
         import glob
         import os
@@ -254,7 +262,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(t)
         else:
             spark.sql(args.query).show(n=args.max_rows, truncate=False)
-        spark.stop()
         return 0
     if args.command == "explain":
         import __spark_entry__ as entrymod
@@ -266,11 +273,9 @@ def main(argv: list[str] | None = None) -> int:
         elif args.name not in queries:
             print(f"unknown query {args.name!r}; run `explain` with no name to list",
                   file=sys.stderr)
-            spark.stop()
             return 2
         else:
             queries[args.name](spark, args.tables).explain("formatted")
-        spark.stop()
         return 0
     if args.command == "versions":
         from billing_etl_v1_spark.sources.writers import (
@@ -291,25 +296,21 @@ def main(argv: list[str] | None = None) -> int:
         elif args.action == "rollback":
             if args.v_to is None:
                 print("rollback requires --to", file=sys.stderr)
-                spark.stop()
                 return 2
             rollback_version(spark, args.table, args.v_to)
             print(f"_LATEST -> v={args.v_to}")
         else:  # diff
             if args.v_from is None or args.v_to is None or not args.keys:
                 print("diff requires --from, --to and --keys", file=sys.stderr)
-                spark.stop()
                 return 2
             snapshot_diff(
                 spark, args.table, args.v_from, args.v_to, args.keys.split(",")
             ).show(n=args.max_rows, truncate=False)
-        spark.stop()
         return 0
     if args.command == "schema":
         for path in args.paths:
             print(f"-- {path}")
             print(spark.read.parquet(path).schema.treeString())
-        spark.stop()
         return 0
     if args.command == "corpus":
         from billing_etl_v1_spark.operators.corpus import corpus_build, training_corpus
@@ -324,7 +325,6 @@ def main(argv: list[str] | None = None) -> int:
         out.write.mode("overwrite").parquet(args.target)
         n = spark.read.parquet(args.target).count()
         print(f"corpus build complete: {n} docs packed into shards at {args.target}")
-        spark.stop()
         return 0
     if args.command in ("tokenizer", "unigram"):
         # ONE tokenizer CLI path (VERDICT r7 #7): `unigram` is a
@@ -402,7 +402,6 @@ def main(argv: list[str] | None = None) -> int:
         else:
             if not args.target:
                 print("tokenizer encode requires --target", file=sys.stderr)
-                spark.stop()
                 return 2
             if family == "bpe":
                 from billing_etl_v1_spark.operators import bpe as bpe_ops
@@ -433,7 +432,6 @@ def main(argv: list[str] | None = None) -> int:
             counts.write.mode("overwrite").parquet(args.target)
             n = spark.read.parquet(args.target).count()
             print(f"encode complete: {n} docs counted at {args.target}")
-        spark.stop()
         return 0
     fact = spark.read.parquet(args.fact)
     dim = spark.read.parquet(args.dim)
@@ -443,14 +441,11 @@ def main(argv: list[str] | None = None) -> int:
             if args.date
             else dt.datetime.now(dt.timezone.utc).date()
         )
-        month, lo, hi = run_daily(
-            fact, dim, args.target, process_date, lookback_days=args.lookback_days
-        )
+        month, lo, hi = run_daily(fact, dim, args.target, process_date)
         print(f"daily run complete: month={month} window=[{lo}, {hi})")
     else:
         run_month(fact, dim, args.target, args.invoice_month)
         print(f"month backfill complete: {args.invoice_month}")
-    spark.stop()
     return 0
 
 

@@ -1,10 +1,12 @@
 """S5: schema conformance toward the 37-column target table.
 
 Mirrors ``_insert_calculated_data`` (reference
-billing_calculation_service.py:330-425) as one declarative ``select``:
+billing_calculation_service.py:330-425) as one declarative ``select``
+derived from ``schemas.TARGET_SCHEMA``, field by field:
 
 - add missing columns with type-appropriate defaults ('' for strings, 0.0
-  for numerics, NULL preserved for customer_id/contract_id) (:354-371)
+  for numerics, NULL preserved for the nullable customer_id/contract_id)
+  (:354-371)
 - NaN->'' for non-nullable strings (:382-388), NaN->0 for numerics (:390-394)
 - mode -> int with default 0 (:407-411)
 - usage_day -> date (:421-425)
@@ -18,14 +20,10 @@ import datetime as _dt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StringType
 
 from billing_etl_v1_spark.functions import built_once
-from billing_etl_v1_spark.schemas import (
-    TARGET_COLUMNS,
-    TARGET_NULLABLE_STRING_COLUMNS,
-    TARGET_NUMERIC_COLUMNS,
-    TARGET_STRING_COLUMNS,
-)
+from billing_etl_v1_spark.schemas import TARGET_SCHEMA
 
 
 def conform_to_target(
@@ -33,11 +31,14 @@ def conform_to_target(
     etl_time: _dt.datetime | None = None,
     include_etl_time: bool = True,
 ) -> DataFrame:
-    """Project onto the exact 37-column target schema with reference defaults.
+    """Project onto the exact 37-column ``TARGET_SCHEMA`` with reference
+    defaults.
 
-    NULLs take the type-appropriate defaults; type GARBAGE (a string 'abc'
-    in a numeric column, '2024-99-99' in usage_day) meets a plain cast, so
-    under ANSI mode one malformed value fails the job loudly here."""
+    Each column is cast to its field's type; on a non-nullable field NULLs
+    take the type's default ('' string, 0.0 double, 0 int). Type GARBAGE
+    (a string 'abc' in a numeric column, '2024-99-99' in usage_day) meets
+    a plain cast, so under ANSI mode one malformed value fails the job
+    loudly here."""
     cols = _target_columns(tuple(df.columns))
     if not include_etl_time:
         return df.select(*[c for c in cols if c is not None])
@@ -45,35 +46,25 @@ def conform_to_target(
     return df.select(*[etl.alias("etl_time") if c is None else c for c in cols])
 
 
+# the sink's default per type for a non-nullable field; DateType has none
+_DEFAULTS = {StringType(): "", DoubleType(): 0.0, IntegerType(): 0}
+
+
 @built_once
 def _target_columns(present: tuple[str, ...]) -> list[Column | None]:
-    """The target projection of a frame with columns ``present``; None
-    stands for etl_time, which is a per-run value."""
+    """The target projection of a frame with columns ``present``: each
+    ``TARGET_SCHEMA`` field cast to its type (an absent one from a typed
+    NULL), and a non-nullable one with a type default coalesced to it.
+    None stands for etl_time, which is a per-run value."""
     out: list[Column | None] = []
-    for name in TARGET_COLUMNS:
-        if name == "etl_time":
+    for f in TARGET_SCHEMA:
+        if f.name == "etl_time":
             out.append(None)
             continue
-        if name == "usage_day":
-            # guarded like every other branch: absent -> typed NULL (a
-            # month-grain rollup legitimately has no day column), not an
-            # UNRESOLVED_COLUMN crash (review finding)
-            base = F.col(name) if name in present else F.lit(None)
-            col = base.cast("date")
-        elif name == "mode":
-            base = F.col(name) if name in present else F.lit(None)
-            col = F.coalesce(base.cast("int"), F.lit(0))
-        elif name in TARGET_NULLABLE_STRING_COLUMNS:
-            col = (F.col(name) if name in present else F.lit(None)).cast("string")
-        elif name in TARGET_STRING_COLUMNS:
-            base = F.col(name) if name in present else F.lit(None)
-            col = F.coalesce(base.cast("string"), F.lit(""))
-        elif name in TARGET_NUMERIC_COLUMNS:
-            base = F.col(name) if name in present else F.lit(None)
-            col = F.coalesce(base.cast("double"), F.lit(0.0))
-        else:  # pragma: no cover - exhaustive above
-            col = F.col(name)
-        out.append(col.alias(name))
+        col = (F.col(f.name) if f.name in present else F.lit(None)).cast(f.dataType)
+        if not f.nullable and f.dataType in _DEFAULTS:
+            col = F.coalesce(col, F.lit(_DEFAULTS[f.dataType]))
+        out.append(col.alias(f.name))
     return out
 
 

@@ -70,12 +70,18 @@ def dedupe_dim(dim: DataFrame) -> DataFrame:
     )
 
 
+def rule_number() -> Column:
+    """A dim row's rule, 1 + p + 2s + 4k from the NULL pattern of
+    (project_id, service_description, sku_id): the RULE_PATTERNS numbering."""
+    p, s, k = (F.col(c).isNotNull().cast("int") for c in WILDCARD_COLUMNS)
+    return 1 + p + 2 * s + 4 * k
+
+
 def _rule_map(dim: DataFrame) -> DataFrame:
     """One row per (month, account) with its deduped rules (``dedupe_dim``:
-    map keys must be unique) as a key -> payload map; the rule number
-    1 + p + 2s + 4k from the NULL pattern is the RULE_PATTERNS numbering."""
-    p, s, k = (F.col(c).isNotNull().cast("int") for c in WILDCARD_COLUMNS)
-    key = F.struct((1 + p + 2 * s + 4 * k).alias("rule"), *WILDCARD_COLUMNS)
+    map keys must be unique) as a key -> payload map keyed on the rule
+    number and the wildcard columns."""
+    key = F.struct(rule_number().alias("rule"), *WILDCARD_COLUMNS)
     entry = F.struct(key, F.struct(*RULE_COLUMNS))
     return dedupe_dim(dim).groupBy(
         F.col("month").alias("__m"), F.col("billing_account_id").alias("__a")
@@ -116,7 +122,7 @@ def _lookups() -> tuple[Column, dict[str, Column], dict[str, Column]]:
     return on, out, {c: F.coalesce(*[F.col(f"__r{r}")[c] for r in PRIORITY]) for c in RULE_COLUMNS}
 
 
-def match_rules(fact: DataFrame, dim: DataFrame, cache_dim: bool = True) -> DataFrame:
+def match_rules(fact: DataFrame, dim: DataFrame) -> DataFrame:
     """J1: attach the winning rule's payload columns to the fact.
 
     ``fact`` must carry ``invoice_month`` ('YYYYMM'); the join matches it
@@ -127,13 +133,13 @@ def match_rules(fact: DataFrame, dim: DataFrame, cache_dim: bool = True) -> Data
     calculate/service.py:51,61,70,87-88). The dim is deduped first
     (``dedupe_dim``).
 
-    ``cache_dim`` materializes the rule map once per (session, input dim
-    plan), as the reference loads the dim into driver memory once per run
+    The rule map is materialized once per (session, input dim plan), as
+    the reference loads the dim into driver memory once per run
     (billing_calculation_service.py:291-327); ``release_dim_cache`` drops
     it. The 8 lookups get their own projection: inlined into the 6
     coalesces they would not be shared.
     """
-    rules = _memo.memo_persist(dim, _DIM_CACHE, derive=_rule_map) if cache_dim else _rule_map(dim)
+    rules = _memo.memo_persist(dim, _DIM_CACHE, derive=_rule_map)
     on, lookups, coalesced = _lookups()
     return (
         fact.join(F.broadcast(rules), on=on, how="left")

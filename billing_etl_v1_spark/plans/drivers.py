@@ -2,12 +2,13 @@
 orchestration (SURVEY §2.9).
 
 ``run_daily`` reproduces the daily cron's window arithmetic exactly
-(4-day lookback clamped to month start, invoice_month = process date's
-'YYYYMM' — reference main.py:165-171); ``run_month`` is the monthly
-backfill (excute_month_task.py:167-200). Everything else the reference's
-drivers did — per-day loops, per-account loops, tmp-table swaps, manual
-deletes — is subsumed by the single DAG + dynamic partition overwrite
-(stale-day caveat: ``sources.writers.write_calculated``).
+(a fixed ``LOOKBACK_DAYS`` = 4 lookback clamped to month start,
+invoice_month = process date's 'YYYYMM' — reference main.py:165-171);
+``run_month`` is the monthly backfill (excute_month_task.py:167-200).
+Everything else the reference's drivers did — per-day loops, per-account
+loops, tmp-table swaps, manual deletes — is subsumed by the single DAG +
+dynamic partition overwrite (stale-day caveat:
+``sources.writers.write_calculated``).
 No scheduler lives in the engine; any cron can call these.
 """
 
@@ -21,11 +22,15 @@ from billing_etl_v1_spark.plans.pipeline import billing_pipeline
 from billing_etl_v1_spark.sources.writers import write_calculated
 
 
-def daily_window(process_date: dt.date, lookback_days: int = 4) -> tuple[str, dt.date, dt.date]:
-    """(invoice_month, day_start, day_end]: lookback clamped to month start
-    (reference main.py:165-171)."""
+# the daily cron recomputes the last 4 days (reference main.py:165-171)
+LOOKBACK_DAYS = 4
+
+
+def daily_window(process_date: dt.date) -> tuple[str, dt.date, dt.date]:
+    """(invoice_month, day_start, day_end]: the ``LOOKBACK_DAYS`` lookback
+    clamped to month start (reference main.py:165-171)."""
     month_start = process_date.replace(day=1)
-    day_start = max(process_date - dt.timedelta(days=lookback_days), month_start)
+    day_start = max(process_date - dt.timedelta(days=LOOKBACK_DAYS), month_start)
     day_end = process_date + dt.timedelta(days=1)  # half-open upper bound
     return process_date.strftime("%Y%m"), day_start, day_end
 
@@ -35,12 +40,12 @@ def run_daily(
     dim: DataFrame,
     target_path: str,
     process_date: dt.date,
-    lookback_days: int = 4,
     **pipeline_kwargs,
 ) -> tuple[str, dt.date, dt.date]:
-    """Daily incremental run: compute the lookback window and overwrite
-    the day partitions the output contains (``write_calculated``)."""
-    invoice_month, day_start, day_end = daily_window(process_date, lookback_days)
+    """Daily incremental run: compute the lookback window (``daily_window``)
+    and overwrite the day partitions the output contains
+    (``write_calculated``)."""
+    invoice_month, day_start, day_end = daily_window(process_date)
     out = billing_pipeline(
         fact,
         dim,

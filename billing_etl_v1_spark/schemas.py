@@ -12,7 +12,10 @@ Column/type inventory derives from the reference's observed usage
   (reference calculate/service.py:117-124). NULL must never be collapsed
   to '' (SURVEY §2.10.4).
 - target ``dwm_standard_daily_billing_calculated``: the 37-column invoice
-  output (reference billing_calculation_service.py:335-352).
+  output (reference billing_calculation_service.py:335-352). ``TARGET_SCHEMA``
+  is its one declaration — order, types and the sink's NULL policy (as
+  nullability); ``TARGET_COLUMNS`` and ``TARGET_NUMERIC_COLUMNS`` derive
+  from it.
 
 ``discount``/``price`` in the dim are stored loosely as strings and re-cast
 to double at every use in the reference (calculate/service.py:51,61,70,87-88);
@@ -107,71 +110,14 @@ DIM_CONTRACT_SCHEMA = StructType(
     ]
 )
 
-# 37 columns in this exact order
-# (reference billing_calculation_service.py:335-352)
-TARGET_COLUMNS = [
-    "usage_day",
-    "invoice_month",
-    "billing_account_id",
-    "customer_id",
-    "contract_id",
-    "service_id",
-    "service_description",
-    "sku_id",
-    "sku_description",
-    "project_id",
-    "project_name",
-    "usage_pricing_unit",
-    "usage_amount_in_pricing_units",
-    "currency",
-    "currency_conversion_rate",
-    "cost_type",
-    "cost",
-    "cost_at_list",
-    *CREDIT_BUCKET_COLUMNS,
-    "internal_credits_cost",
-    "internal_credits_consumption",
-    "internal_cost",
-    "internal_consumption",
-    "external_consumption",
-    "discount_amount",
-    "mode",
-    "price",
-    "discount",
-    "credit_fields",
-    "etl_time",
-]
-
-# string columns flattened NaN->'' at the sink
-# (reference billing_calculation_service.py:383-385)
-TARGET_STRING_COLUMNS = [
-    "billing_account_id",
-    "service_id",
-    "service_description",
-    "sku_id",
-    "sku_description",
-    "project_id",
-    "project_name",
-    "usage_pricing_unit",
-    "currency",
-    "cost_type",
-    "credit_fields",
-    "invoice_month",
-]
-
-# Nullable(String) passthroughs that must keep NULL
-# (reference billing_calculation_service.py:359-361,413-419)
-TARGET_NULLABLE_STRING_COLUMNS = ["customer_id", "contract_id"]
-
-TARGET_NUMERIC_COLUMNS = [
-    c
-    for c in TARGET_COLUMNS
-    if c
-    not in TARGET_STRING_COLUMNS
-    + TARGET_NULLABLE_STRING_COLUMNS
-    + ["etl_time", "usage_day", "mode"]
-]
-
+# The target table's only declaration: 37 columns in this exact order
+# (reference billing_calculation_service.py:335-352). Nullability is the
+# sink's NULL policy, which conform_to_target derives per field:
+# non-nullable strings flatten NaN/NULL to '' (:383-385), doubles to 0.0
+# (:390-394), mode to 0 (:407-411); customer_id/contract_id are
+# Nullable(String) passthroughs that keep NULL (:359-361, :413-419).
+# usage_day has no default (a month-grain frame leaves it NULL) and etl_time
+# is the per-run timestamp.
 TARGET_SCHEMA = StructType(
     [
         StructField("usage_day", DateType(), False),
@@ -206,3 +152,6 @@ TARGET_SCHEMA = StructType(
         StructField("etl_time", TimestampType(), False),
     ]
 )
+
+TARGET_COLUMNS = TARGET_SCHEMA.fieldNames()
+TARGET_NUMERIC_COLUMNS = [f.name for f in TARGET_SCHEMA if isinstance(f.dataType, DoubleType)]

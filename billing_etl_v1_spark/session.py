@@ -4,9 +4,9 @@ Runs on ``local[$SPARK_GRAFT_CPUS]``, defaulting to the cores this process
 may use (its CPU affinity), so a cron on a small box is not oversubscribed.
 Every other config here is chosen for the 100 TB / 1000-executor posture:
 
-- AQE on (runtime shuffle-partition coalescing + skew-join splitting) —
-  replaces the reference's hand-coded heavy-account chunking
-  (reference main.py:86-104).
+- AQE (runtime shuffle-partition coalescing + skew-join splitting) is
+  Spark's default, so nothing sets it; it replaces the reference's
+  hand-coded heavy-account chunking (reference main.py:86-104).
 - Arrow enabled for the few pandas-interop paths (multimodal UDFs).
 """
 
@@ -55,9 +55,6 @@ def get_spark(
         # multi-executor cluster the equivalent knob is initialPartitionNum
         # ≈ 2-4x total cores with AQE coalescing down; revisit there.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -485,8 +485,13 @@ def test_billing_pipeline_output_matches_target_schema(spark):
 def test_conform_defaults_missing_usage_day(spark):
     """Every absent target column takes a typed default — including
     usage_day (review finding: the one unguarded branch crashed with
-    UNRESOLVED_COLUMN on month-grain frames)."""
+    UNRESOLVED_COLUMN on month-grain frames). The sink's policy per
+    absent column: strings '', customer_id/contract_id NULL, doubles 0.0,
+    mode 0, usage_day NULL."""
+    from pyspark.sql.types import DoubleType, StringType
+
     from billing_etl_v1_spark.operators.conform import conform_to_target
+    from billing_etl_v1_spark.schemas import TARGET_SCHEMA
 
     df = spark.createDataFrame(
         [("199506", "A")], "invoice_month string, billing_account_id string"
@@ -494,6 +499,20 @@ def test_conform_defaults_missing_usage_day(spark):
     out = conform_to_target(df, include_etl_time=False).collect()[0]
     assert out.usage_day is None
     assert out.invoice_month == "199506" and out.cost == 0.0
+    for f in TARGET_SCHEMA:
+        if f.name in ("invoice_month", "billing_account_id", "etl_time"):
+            continue
+        if f.name in ("usage_day", "customer_id", "contract_id"):
+            want = None
+        elif f.name == "mode":
+            want = 0
+        elif isinstance(f.dataType, StringType):
+            want = ""
+        else:
+            assert isinstance(f.dataType, DoubleType), f.name
+            want = 0.0
+        got = out[f.name]
+        assert got == want and type(got) is type(want), (f.name, got)
 
 
 def test_dq_audit_zero_rows_and_mode4_null_price(spark):

@@ -23,6 +23,7 @@ from billing_etl_v1_spark.operators.rules import (
     RULE_COLUMNS,
     RULE_PATTERNS,
     match_rules,
+    release_dim_cache,
 )
 
 MONTH = "1995-06"
@@ -142,7 +143,11 @@ def test_rule_match_agrees_with_pandas_model(spark, rules, fact):
         "invoice_month string, billing_account_id string, project_id string, "
         "service_description string, sku_id string",
     )
-    got = match_rules(fact_df, dim, cache_dim=False).collect()[0]
+    try:
+        got = match_rules(fact_df, dim).collect()[0]
+    finally:
+        # each example's dim is new: release its cached rule map
+        release_dim_cache(spark)
 
     expected = model_match(
         [dict(r, customer_id=f"CUST-{i}", contract_id=f"CTR-{i}", credit_fields=None)

@@ -318,6 +318,29 @@ def test_cli_daily_window_args(spark, tmp_path, monkeypatch):
     assert days and all("1995-06-16" <= d <= "1995-06-20" for d in days)
 
 
+def test_cli_stops_session_when_command_raises(spark, tmp_path, monkeypatch):
+    """A command that raises still stops the session: ``daily`` over a
+    missing fact fails with PATH_NOT_FOUND, and ``stop`` runs once."""
+    from pyspark.errors import AnalysisException
+
+    from billing_etl_v1_spark import cli
+
+    stops = []
+    monkeypatch.setattr("billing_etl_v1_spark.session.get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: stops.append(1))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        cli.main(
+            [
+                "daily",
+                "--fact", str(tmp_path / "no_fact"),
+                "--dim", str(tmp_path / "no_dim"),
+                "--target", str(tmp_path / "target"),
+                "--date", "1995-06-20",
+            ]
+        )
+    assert stops == [1]
+
+
 def test_cli_schema_subcommand(spark, monkeypatch, capsys):
     from billing_etl_v1_spark import cli
 
