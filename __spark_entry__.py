@@ -79,11 +79,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     fact, dim = _billing_ctx(spark, "/root/testdata/sf0.001")
     return billing_pipeline(
-        fact,
-        dim,
-        extra_discounts=oracle.TEST_EXTRA_DISCOUNTS,
-        include_etl_time=False,
-    )
+        fact, dim, extra_discounts=oracle.TEST_EXTRA_DISCOUNTS
+    ).drop("etl_time")
 
 
 # --- billing queries -------------------------------------------------------
@@ -178,8 +175,7 @@ def _flagship(month: str | None, grain: str) -> Callable[[SparkSession, str], Da
                 invoice_month=month,
                 grain=grain,
                 extra_discounts=oracle.TEST_EXTRA_DISCOUNTS,
-                include_etl_time=False,
-            )
+            ).drop("etl_time")
         )
 
     return q
@@ -205,8 +201,8 @@ def _q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fact, dim = _billing_ctx(spark, sf_dir)
     calc = billing_pipeline(
-        fact, dim, extra_discounts=oracle.TEST_EXTRA_DISCOUNTS, include_etl_time=False
-    )
+        fact, dim, extra_discounts=oracle.TEST_EXTRA_DISCOUNTS
+    ).drop("etl_time")
     # audit the QUANTIZED output (what the sink publishes, and what the
     # oracle's flagship SQL emits) — raw doubles carry 1e-18 residues that
     # flip exact-zero checks like the mode-4 guard

@@ -84,7 +84,7 @@ def quantize6_staged(df: DataFrame, keep: list, raw, out_name: str) -> DataFrame
     return staged.select(*names, quantize6(F.col("__q6_raw")).alias(out_name))
 
 
-def round_doubles(df: DataFrame, _scale: int = 6) -> DataFrame:
+def round_doubles(df: DataFrame) -> DataFrame:
     """Quantize every double column — canonical money rounding so the DuckDB
     oracle hash comparison is insensitive to representation-edge rounding
     (SURVEY §7.4)."""

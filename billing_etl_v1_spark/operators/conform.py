@@ -12,6 +12,9 @@ derived from ``schemas.TARGET_SCHEMA``, field by field:
 - usage_day -> date (:421-425)
 - etl_time = current timestamp (:358,375) — injectable for deterministic tests
 - fixed column order (:335-352)
+
+The result always has exactly the 37 target columns; a comparison against
+an oracle that has no run timestamp drops etl_time itself.
 """
 
 from __future__ import annotations
@@ -26,13 +29,10 @@ from billing_etl_v1_spark.functions import built_once
 from billing_etl_v1_spark.schemas import TARGET_SCHEMA
 
 
-def conform_to_target(
-    df: DataFrame,
-    etl_time: _dt.datetime | None = None,
-    include_etl_time: bool = True,
-) -> DataFrame:
+def conform_to_target(df: DataFrame, etl_time: _dt.datetime | None = None) -> DataFrame:
     """Project onto the exact 37-column ``TARGET_SCHEMA`` with reference
-    defaults.
+    defaults. ``etl_time`` is the run's timestamp (default
+    ``current_timestamp()``).
 
     Each column is cast to its field's type; on a non-nullable field NULLs
     take the type's default ('' string, 0.0 double, 0 int). Type GARBAGE
@@ -40,8 +40,6 @@ def conform_to_target(
     a plain cast, so under ANSI mode one malformed value fails the job
     loudly here."""
     cols = _target_columns(tuple(df.columns))
-    if not include_etl_time:
-        return df.select(*[c for c in cols if c is not None])
     etl = F.lit(etl_time).cast("timestamp") if etl_time else F.current_timestamp()
     return df.select(*[etl.alias("etl_time") if c is None else c for c in cols])
 

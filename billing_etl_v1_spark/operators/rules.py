@@ -31,19 +31,15 @@ from pyspark.sql import functions as F
 from billing_etl_v1_spark.functions import built_once
 from billing_etl_v1_spark.operators import _memo
 
-# rule number -> non-wildcard dim columns (join keys beyond account)
-RULE_PATTERNS: dict[int, tuple[str, ...]] = {
-    1: (),
-    2: ("project_id",),
-    3: ("service_description",),
-    4: ("project_id", "service_description"),
-    5: ("sku_id",),
-    6: ("project_id", "sku_id"),
-    7: ("service_description", "sku_id"),
-    8: ("project_id", "service_description", "sku_id"),
-}
-
 WILDCARD_COLUMNS = ("project_id", "service_description", "sku_id")
+
+# rule number -> non-wildcard dim columns (join keys beyond account): bit i
+# of rule - 1 marks WILDCARD_COLUMNS[i] as set, the numbering rule_number()
+# computes (1 + p + 2s + 4k)
+RULE_PATTERNS: dict[int, tuple[str, ...]] = {
+    r: tuple(c for i, c in enumerate(WILDCARD_COLUMNS) if (r - 1) >> i & 1)
+    for r in range(1, 9)
+}
 
 # specificity priority (reference sql_template.py:93 comment;
 # calculate/service.py:126 application order reversed)

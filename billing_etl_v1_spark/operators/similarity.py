@@ -16,8 +16,6 @@ query by the cluster assignment computed in the same pass.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,12 +41,10 @@ def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-# Unroll width for _dot_unrolled: the corpus embedding dimension.
-# Env-overridable (ADVICE r11) so a deployment with another width keeps the
-# measured codegen win instead of silently riding the fold fallback — speed
-# only; results are bit-identical either way (both forms accumulate in the
-# same left-to-right order; verified value-equal live).
-_DOT_UNROLL_DIM = int(os.environ.get("SPARK_GRAFT_DOT_UNROLL_DIM", "64"))
+# Unroll width for _dot_unrolled: the corpus embedding dimension. Other
+# widths take the fold fallback, which gives bit-identical results (both
+# forms accumulate in the same left-to-right order).
+_DOT_UNROLL_DIM = 64
 
 
 def _dot_unrolled(a: Column, b: Column) -> Column:

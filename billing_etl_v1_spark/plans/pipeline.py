@@ -46,9 +46,9 @@ def billing_pipeline(
     grain: str = "detail",
     extra_discounts: dict[str, float] | None = None,
     etl_time: _dt.datetime | None = None,
-    include_etl_time: bool = True,
 ) -> DataFrame:
-    """Full calculation: fact + dim -> 37-column calculated invoice lines.
+    """Full calculation: fact + dim -> calculated invoice lines with exactly
+    the 37 ``TARGET_SCHEMA`` columns, names, types and order.
 
     ``grain='pipeline'`` is the production 8-key grain (the sink then fills
     the missing descriptive strings with '' and numerics with 0 exactly like
@@ -73,8 +73,4 @@ def billing_pipeline(
         )
     keys = DETAIL_KEYS if grain == "detail" else PIPELINE_KEYS
     matched = match_rules(source_aggregate(fact, keys=keys), dim)
-    return conform_to_target(
-        with_pricing_modes(matched, extra_discounts),
-        etl_time=etl_time,
-        include_etl_time=include_etl_time,
-    )
+    return conform_to_target(with_pricing_modes(matched, extra_discounts), etl_time)

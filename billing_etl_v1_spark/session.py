@@ -8,6 +8,9 @@ Every other config here is chosen for the 100 TB / 1000-executor posture:
   Spark's default, so nothing sets it; it replaces the reference's
   hand-coded heavy-account chunking (reference main.py:86-104).
 - Arrow enabled for the few pandas-interop paths (multimodal UDFs).
+
+A caller changes any of these (the shuffle width included) through
+``get_spark(extra_conf=...)``, which is applied after the defaults.
 """
 
 from __future__ import annotations
@@ -41,7 +44,6 @@ def default_parallelism() -> int:
 
 def get_spark(
     app_name: str = "billing-etl-v1-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = default_parallelism()
@@ -54,7 +56,7 @@ def get_spark(
         # dominates before per-partition hash pressure does. On a real
         # multi-executor cluster the equivalent knob is initialPartitionNum
         # ≈ 2-4x total cores with AQE coalescing down; revisit there.
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

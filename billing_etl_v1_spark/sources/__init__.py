@@ -1,3 +1,3 @@
-from billing_etl_v1_spark.sources.readers import TPCH_TABLES, load_tables, register_views
+from billing_etl_v1_spark.sources.readers import TPCH_TABLES, register_views
 
-__all__ = ["TPCH_TABLES", "load_tables", "register_views"]
+__all__ = ["TPCH_TABLES", "register_views"]

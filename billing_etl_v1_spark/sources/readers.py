@@ -48,10 +48,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
     """Register the test tables as temp views so shared SQL can run on them."""
     for t in tables or TPCH_TABLES:

@@ -5,8 +5,12 @@ The reference makes re-runs idempotent with:
   ALTER TABLE ... DELETE WHERE invoice_month=... (main.py:177-183,186-192)
   INSERT INTO target SELECT FROM tmp WHERE window  (main.py:195-201)
 
-Each partitioned overwrite here states ``partitionOverwriteMode=dynamic``
-on its own writer, so under any session one ``mode("overwrite")`` write
+``write_calculated`` is the one writer of the (invoice_month, usage_day)
+partitions: the billing drivers, the streaming ingest and
+``compact_partitions`` all write through it, and ``read_calculated``
+reads the table back as exactly ``schemas.TARGET_SCHEMA``. Each
+partitioned overwrite here states ``partitionOverwriteMode=dynamic`` on
+its own writer, so under any session one ``mode("overwrite")`` write
 replaces the partitions present in the incoming frame and leaves every
 other partition untouched (under the session default, ``static``, it
 would erase the whole table first). That is not the reference's window
@@ -22,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.schemas import TARGET_COLUMNS, TARGET_SCHEMA
+
 PARTITION_COLUMNS = ("invoice_month", "usage_day")
-COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def write_calculated(df: DataFrame, path: str) -> None:
@@ -55,7 +60,13 @@ def write_calculated(df: DataFrame, path: str) -> None:
 
 
 def read_calculated(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The table ``write_calculated`` wrote, as exactly ``TARGET_SCHEMA``:
+    its names, types and order. The partition columns' types come from the
+    schema, not from directory-name inference, so they do not depend on the
+    session (inference would read invoice_month '199506' as an int; with
+    inference off, usage_day would be a string). A schema read alone puts
+    the partition columns last; the select restores the target order."""
+    return spark.read.schema(TARGET_SCHEMA).parquet(path).select(*TARGET_COLUMNS)
 
 
 def write_bucketed(
@@ -125,50 +136,33 @@ def compact_partitions(spark: SparkSession, path: str) -> None:
     from other writers (an external appender, a plain ``partitionBy`` write
     without clustering), which leave one file per task per day. At 1000
     executors that is thousands of KB-sized files per partition, and
-    scan/planning cost grows with file COUNT, not bytes.
-    Compaction MERGES small files: the table is rewritten into
-    max(ceil(total_bytes / 128 MiB), one-per-partition) files via a
-    partition-key repartition — the shuffle is one pass over the data and
-    amortizes across every later scan. It is merge-ONLY by policy: a
-    layout already at or below that file count is left untouched (the
-    early return below), so it never splits few oversized files.
+    scan/planning cost grows with file COUNT, not bytes. Compaction rewrites
+    the table through ``write_calculated``, so it ends with one file per
+    partition. It is merge-ONLY: a layout with at most one file in every
+    partition directory is left untouched, so it never rewrites a compact
+    table.
 
-    Uses dynamic partition overwrite (set on its writer) so a crash mid-
-    compaction loses nothing: a partition is replaced atomically or not at
-    all, and re-running is idempotent — same delete-nothing safety the
-    reference's tmp-table swap aimed for (reference main.py:172-201).
-    ``path`` may be any Hadoop path (local, ``file://``, ``hdfs://``, ...).
+    The rewrite replaces each partition atomically or not at all (dynamic
+    partition overwrite), and re-running is idempotent — same
+    delete-nothing safety the reference's tmp-table swap aimed for
+    (reference main.py:172-201). ``path`` may be any Hadoop path (local,
+    ``file://``, ``hdfs://``, ...); the layout check lists it through the
+    Hadoop FS API, with no data read.
     """
-    import math
-
-    df = spark.read.parquet(path)
-    # sizing from the file listing — no data read; per-partition skew in
-    # the rewrite shuffle is handled by AQE coalescing
     fs, hpath = _hadoop_fs(spark, path)
-    total, n_current, parts = 0, 0, set()
+    n_files, parts = 0, set()
     files = fs.listFiles(hpath, True)
     while files.hasNext():
         st = files.next()
         if st.getPath().getName().endswith(".parquet"):
-            n_current += 1
-            total += st.getLen()
+            n_files += 1
             parts.add(st.getPath().getParent().toString())
-    n_files = max(1, math.ceil(total / COMPACT_TARGET_FILE_BYTES))
-    # a partitioned table cannot have fewer than one file per partition, so
-    # an already-compact layout (e.g. written by write_calculated) must be
-    # left alone — rewriting it is a full-table pass that changes nothing
-    if n_current <= max(n_files, len(parts)):
+    if n_files <= len(parts):
         return
     # localCheckpoint materializes the rows and severs lineage to the input
     # files — required to overwrite the path being compacted (Spark refuses
     # a write whose plan still scans the destination)
-    compacted = df.repartition(n_files, *PARTITION_COLUMNS).localCheckpoint()
-    (
-        compacted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*PARTITION_COLUMNS)
-        .parquet(path)
-    )
+    write_calculated(spark.read.parquet(path).localCheckpoint(), path)
 
 
 def write_zordered(

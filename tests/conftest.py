@@ -25,7 +25,7 @@ TESTDATA_TABLES = [
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("pytest", shuffle_partitions=8)
+    spark = get_spark("pytest", extra_conf={"spark.sql.shuffle.partitions": "8"})
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

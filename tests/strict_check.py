@@ -74,7 +74,9 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     names = [k for k in list(queries)[:n] if not only or k in only]
 
-    spark = get_spark("strict-check", shuffle_partitions=16)
+    spark = get_spark(
+        "strict-check", extra_conf={"spark.sql.shuffle.partitions": "16"}
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:

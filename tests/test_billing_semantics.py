@@ -406,7 +406,7 @@ def test_conform_strict_fails_loud_permissive_quarantines(spark):
         "usage_day string, mode string, cost string",
     )
     with pytest.raises(Exception, match="CAST_INVALID_INPUT|ANSI|Cannot cast|DateTimeException|CANNOT_PARSE"):
-        conform_to_target(df, include_etl_time=False).collect()
+        conform_to_target(df).collect()
 
 
 def test_credits_pivot_null_amount_contributes_zero_everywhere(spark):
@@ -496,7 +496,7 @@ def test_conform_defaults_missing_usage_day(spark):
     df = spark.createDataFrame(
         [("199506", "A")], "invoice_month string, billing_account_id string"
     )
-    out = conform_to_target(df, include_etl_time=False).collect()[0]
+    out = conform_to_target(df).collect()[0]
     assert out.usage_day is None
     assert out.invoice_month == "199506" and out.cost == 0.0
     for f in TARGET_SCHEMA:
@@ -524,9 +524,7 @@ def test_dq_audit_zero_rows_and_mode4_null_price(spark):
     discount_amount."""
     from billing_etl_v1_spark.operators.conform import conform_to_target, dq_audit
 
-    empty = conform_to_target(
-        spark.createDataFrame([], "invoice_month string"), include_etl_time=False
-    )
+    empty = conform_to_target(spark.createDataFrame([], "invoice_month string"))
     got = {r["check"]: r.violations for r in dq_audit(empty).collect()}
     assert got == {
         "null_required_keys": 0,
@@ -543,8 +541,7 @@ def test_dq_audit_zero_rows_and_mode4_null_price(spark):
             [("199506", "A", 4, 0.0, legit.discount_amount)],
             "invoice_month string, billing_account_id string, mode int, "
             "price double, discount_amount double",
-        ),
-        include_etl_time=False,
+        )
     )
     got = {r["check"]: r.violations for r in dq_audit(frame).collect()}
     assert got["mode4_zero_price_leak"] == 0
@@ -567,8 +564,7 @@ def test_dq_audit_detail_grain_rate_change_not_duplicate(spark):
             [("199506", "A", 1.0), ("199506", "A", 1.1)],
             "invoice_month string, billing_account_id string, "
             "currency_conversion_rate double",
-        ),
-        include_etl_time=False,
+        )
     )
     got = {r["check"]: r.violations for r in dq_audit(frame).collect()}
     assert got["duplicate_grain_rows"] == 0

@@ -108,9 +108,11 @@ def engine_out(spark):
     )
     fact, dim = synthetic.fact_df(spark), synthetic.dim_df(spark)
     # no extra_discounts (see module docstring), no etl_time (wall clock)
-    return billing_pipeline(
-        fact, dim, grain="pipeline", extra_discounts=None, include_etl_time=False
-    ).toPandas()
+    return (
+        billing_pipeline(fact, dim, grain="pipeline", extra_discounts=None)
+        .drop("etl_time")
+        .toPandas()
+    )
 
 
 def _sink_normalize(ref: pd.DataFrame) -> pd.DataFrame:

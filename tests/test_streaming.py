@@ -43,7 +43,7 @@ def test_streaming_billing_ingest_matches_batch(spark, tmp_path):
 
     from billing_etl_v1_spark.plans.pipeline import billing_pipeline
 
-    batch_rows = billing_pipeline(fact, dim, include_etl_time=False).count()
+    batch_rows = billing_pipeline(fact, dim).count()
     stream_rows = read_calculated(spark, target).count()
     assert stream_rows == batch_rows > 0
 
@@ -79,7 +79,7 @@ def test_streaming_billing_ingest_day_split_across_batches(spark, tmp_path):
     q.awaitTermination(120)
 
     cols = [F.col(c).cast("string") for c in DETAIL_KEYS] + ["cost"]
-    batch = billing_pipeline(fact, dim, include_etl_time=False).select(*cols)
+    batch = billing_pipeline(fact, dim).select(*cols)
     streamed = read_calculated(spark, target).select(*cols)
     assert streamed.count() == batch.count() > 0
     assert streamed.exceptAll(batch).isEmpty()

@@ -94,7 +94,9 @@ def test_top_paths_null_event_type_matches_oracle():
     from billing_etl_v1_spark.session import get_spark
     from tests.conftest import normalize
 
-    spark = get_spark("nullpath-test", shuffle_partitions=4)
+    spark = get_spark(
+        "nullpath-test", extra_conf={"spark.sql.shuffle.partitions": "4"}
+    )
     t0 = dt.datetime(2025, 1, 1)
     rows = [
         (1, "u1", t0, "view"),
