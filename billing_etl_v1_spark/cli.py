@@ -82,8 +82,7 @@ def build_parser() -> argparse.ArgumentParser:
         default="bpe",
         help="tokenizer family: bpe (GPT lineage, default), unigram "
         "(SentencePiece-style Llama lineage), wordpiece (BERT lineage — "
-        "likelihood-ratio merges, greedy longest-match serve). The "
-        "legacy `unigram` subcommand is an alias for --family unigram",
+        "likelihood-ratio merges, greedy longest-match serve)",
     )
     tok.add_argument("--docs", required=True, help="documents parquet path")
     tok.add_argument(
@@ -144,45 +143,6 @@ def build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="train (unigram): full Kudo lattice soft-EM trainer "
         "driver-side over the collected bounded vocabulary",
-    )
-
-    uni = sub.add_parser(
-        "unigram",
-        help="back-compat alias for `tokenizer --family unigram`",
-    )
-    uni.add_argument("action", choices=["train", "encode"])
-    uni.add_argument("--docs", required=True, help="documents parquet path")
-    uni.add_argument(
-        "--tokenizer",
-        required=True,
-        help="tokenizer directory (pieces + segments parquet tables)",
-    )
-    uni.add_argument(
-        "--target", help="encode: output parquet for per-doc token counts"
-    )
-    uni.add_argument(
-        "--vocab-size", type=int, default=32, help="train: final piece budget"
-    )
-    uni.add_argument(
-        "--max-piece-len", type=int, default=4, help="train: longest candidate piece"
-    )
-    uni.add_argument(
-        "--max-word-len",
-        type=int,
-        default=16,
-        help="train: pre-token Viterbi-bypass cap; stored in the artifact "
-        "with --max-piece-len — encode always serves at the stored bounds",
-    )
-    uni.add_argument(
-        "--em-rounds", type=int, default=2, help="train: EM sweeps before the prune"
-    )
-    uni.add_argument(
-        "--lattice",
-        action="store_true",
-        help="train: full Kudo lattice soft-EM + likelihood-loss pruning, "
-        "driver-side over the collected bounded vocabulary (the corpus "
-        "pass stays distributed); default is the distributed Viterbi "
-        "hard-EM trainer",
     )
 
     # ad-hoc SQL over tables-at-rest (reference README.md:38-45's documented
@@ -326,21 +286,15 @@ def _run(spark, args: argparse.Namespace) -> int:
         n = spark.read.parquet(args.target).count()
         print(f"corpus build complete: {n} docs packed into shards at {args.target}")
         return 0
-    if args.command in ("tokenizer", "unigram"):
-        # ONE tokenizer CLI path (VERDICT r7 #7): `unigram` is a
-        # back-compat alias for `tokenizer --family unigram`; its parser
-        # lacks the bpe/wordpiece-only flags, hence the getattr defaults
-        family = "unigram" if args.command == "unigram" else args.family
+    if args.command == "tokenizer":
         docs = spark.read.parquet(args.docs)
         if args.action == "train":
-            if family == "bpe":
+            if args.family == "bpe":
                 from billing_etl_v1_spark.operators import bpe as bpe_ops
 
                 cap = 256 if args.max_word_len is None else args.max_word_len
                 learn = (
-                    bpe_ops.bpe_learn_driver
-                    if getattr(args, "driver_loop", False)
-                    else bpe_ops.bpe_learn
+                    bpe_ops.bpe_learn_driver if args.driver_loop else bpe_ops.bpe_learn
                 )
                 merges, vocab = learn(
                     docs,
@@ -355,13 +309,13 @@ def _run(spark, args: argparse.Namespace) -> int:
                     f"tokenizer trained: {merges.count()} merges, "
                     f"{vocab.count()} words at {args.tokenizer}"
                 )
-            elif family == "unigram":
+            elif args.family == "unigram":
                 from billing_etl_v1_spark.operators import unigram as ug_ops
 
                 mwl = 16 if args.max_word_len is None else args.max_word_len
                 learn = (
                     ug_ops.unigram_learn_lattice
-                    if getattr(args, "lattice", False)
+                    if args.lattice
                     else ug_ops.unigram_learn
                 )
                 pieces, segments = learn(
@@ -388,7 +342,7 @@ def _run(spark, args: argparse.Namespace) -> int:
                 cap = 16 if args.max_word_len is None else args.max_word_len
                 build = (
                     wp_ops.wordpiece_artifacts_driver
-                    if getattr(args, "driver_loop", False)
+                    if args.driver_loop
                     else wp_ops.wordpiece_artifacts
                 )
                 merges, ids, segments = build(
@@ -403,7 +357,7 @@ def _run(spark, args: argparse.Namespace) -> int:
             if not args.target:
                 print("tokenizer encode requires --target", file=sys.stderr)
                 return 2
-            if family == "bpe":
+            if args.family == "bpe":
                 from billing_etl_v1_spark.operators import bpe as bpe_ops
 
                 merges, vocab, stored_cap, level = bpe_ops.load_bpe(
@@ -413,7 +367,7 @@ def _run(spark, args: argparse.Namespace) -> int:
                 counts = bpe_ops.bpe_encode(
                     docs, merges, vocab, max_word_len=cap, level=level
                 )
-            elif family == "unigram":
+            elif args.family == "unigram":
                 from billing_etl_v1_spark.operators import unigram as ug_ops
 
                 pieces, segments, mpl, mwl = ug_ops.load_unigram(

@@ -64,11 +64,12 @@ SUM_MEASURES = [
 ]
 
 
-def source_aggregate(fact: DataFrame, keys: list[str] | None = None) -> DataFrame:
+def source_aggregate(fact: DataFrame, keys: list[str]) -> DataFrame:
     """A1/A2: hash group-by over the fact grain with 13 SUM measures.
 
-    Groups on exactly ``keys`` (default PIPELINE_KEYS); the contract month
-    is derived from invoice_month in the rule join (``rules.match_rules``).
+    Groups on exactly ``keys`` (PIPELINE_KEYS or DETAIL_KEYS); the
+    contract month is derived from invoice_month in the rule join
+    (``rules.match_rules``).
 
     Accumulation contract: each double is quantized to an exact 1e-10
     integer grid (round half toward +inf) and summed as a sign-safe
@@ -83,7 +84,7 @@ def source_aggregate(fact: DataFrame, keys: list[str] | None = None) -> DataFram
     whole-table rollup/cube totals keep the DECIMAL path. Downstream
     pricing math stays double, like the reference's float pipeline.
     """
-    return fact.groupBy(*(keys or PIPELINE_KEYS)).agg(*_exact_sums())
+    return fact.groupBy(*keys).agg(*_exact_sums())
 
 
 @built_once

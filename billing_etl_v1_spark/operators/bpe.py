@@ -88,6 +88,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from billing_etl_v1_spark.operators import _memo
 from billing_etl_v1_spark.operators.text import BPE_TOKEN_RE, WS_RE
 
 # GPT-2-style pre-tokenizer for the byte-level mode (Radford et al. 2019;
@@ -116,26 +117,16 @@ def _check_level(level: str) -> None:
         raise ValueError(f"level must be one of {_LEVELS}, got {level!r}")
 
 
-# (session id, word_vocab semanticHash, num_merges, max_word_len, level) ->
-# (analyzed plan, merges, vocab). Result-level memo so docs_bpe_merges /
-# docs_bpe_tokens on the same corpus train once per session, not once per
-# query — the _memo pattern, keyed the same way (hash CONFIRMED via
-# sameResult).
-_LEARN_CACHE: dict[
-    tuple[int, int, int, int, str], tuple[object, DataFrame, DataFrame]
-] = {}
+# (merges, vocab) per corpus plan and hyperparameters, so docs_bpe_merges /
+# docs_bpe_tokens on the same corpus train once per session (see _memo)
+_LEARN_CACHE: _memo.Registry = {}
 
 
 def release_bpe_cache(spark=None) -> int:
     """Drop memoized training results (for ``spark`` only, or all
     sessions). The underlying localCheckpoint storage is freed by RDD GC
     once the frames are unreachable."""
-    dropped = 0
-    for key in list(_LEARN_CACHE):
-        if spark is None or key[0] == id(spark):
-            del _LEARN_CACHE[key]
-            dropped += 1
-    return dropped
+    return _memo.release(_LEARN_CACHE, spark)
 
 
 def _pretokens(col: Column, level: str = "char") -> Column:
@@ -420,19 +411,20 @@ def bpe_learn(
     if max_word_len < 1:
         raise ValueError(f"max_word_len must be >= 1, got {max_word_len}")
     _check_level(level)
-    spark = df.sparkSession
     base = word_vocab(df, text_col, level)
-    analyzed = base._jdf.queryExecution().analyzed()
-    key = (id(spark), analyzed.semanticHash(), num_merges, max_word_len, level)
-    hit = _LEARN_CACHE.get(key)
-    if hit is not None:
-        plan, m_hit, v_hit = hit
-        try:
-            if plan.sameResult(analyzed):
-                return m_hit, v_hit
-        except Exception:
-            pass  # stopped session / dead JVM handle — miss, evict
-        del _LEARN_CACHE[key]
+    return _memo.memoize(
+        base,
+        _LEARN_CACHE,
+        (num_merges, max_word_len, level),
+        lambda: _bpe_train(base, num_merges, max_word_len),
+    )
+
+
+def _bpe_train(
+    base: DataFrame, num_merges: int, max_word_len: int
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`bpe_learn`'s training run over the ``word_vocab`` table."""
+    spark = base.sparkSession
     empty_merges = spark.createDataFrame(
         [],
         "merge_rank int, left_sym string, right_sym string, "
@@ -516,7 +508,6 @@ def bpe_learn(
     ).unionByName(
         bypass.select("word", "freq", F.col("s").alias("tokens"))
     )
-    _LEARN_CACHE[key] = (analyzed, merges, vocab)
     return merges, vocab
 
 

@@ -66,7 +66,7 @@ def _target_columns(present: tuple[str, ...]) -> list[Column | None]:
     return out
 
 
-def dq_audit(calculated: DataFrame, grain: list[str] | None = None) -> DataFrame:
+def dq_audit(calculated: DataFrame) -> DataFrame:
     """Data-quality audit over calculated invoice lines: one row per check
     with its violation count — the post-pipeline gate a billing close runs
     before publishing (the reference's only quality control is sink-side
@@ -76,9 +76,12 @@ def dq_audit(calculated: DataFrame, grain: list[str] | None = None) -> DataFrame
     Checks: NULL required keys, negative money, mode outside 0..4,
     mode-4 rows with price=0 AND nonzero discount_amount (the zero-price
     guard must zero the credit part, calculate/service.py:93), and
-    duplicate physical grain. ONE computation of the input: the grain
-    groupBy carries the conditional check sums alongside the per-grain
-    row count, a global rollup folds both, and ``stack()`` melts the
+    duplicate physical grain. Duplicates are counted over the 13
+    ``DETAIL_KEYS`` at either grain: on a production-grain frame conform
+    fills the five detail-only keys with constants, so grouping on all 13
+    is grouping on the 8 production keys. ONE computation of the input:
+    the grain groupBy carries the conditional check sums alongside the
+    per-grain row count, a global rollup folds both, and ``stack()`` melts the
     single total row to (check, violations) rows. The r10 form melted
     via 4 chained ``unionAll`` of the same 1-row aggregate plus a
     separate duplicate subquery — Catalyst shares no subtrees across
@@ -87,17 +90,8 @@ def dq_audit(calculated: DataFrame, grain: list[str] | None = None) -> DataFrame
     this form plans the flagship's own scan count and 2 shuffles, both
     pinned by tests/test_scale_posture.py.
     """
-    # duplicate detection must run at the grain the frame is actually at —
-    # auditing detail-grain output against the coarser production grain
-    # reports legitimate detail rows as duplicates
-    # default to the FINEST grain the engine emits (the 13 DETAIL_KEYS —
-    # hand-listing dropped currency_conversion_rate, so detail rows
-    # differing only in conversion rate counted as duplicates; review
-    # finding); pass the production 8-key grain explicitly when auditing
-    # production-grain frames
     from billing_etl_v1_spark.operators.aggregate import DETAIL_KEYS
 
-    grain = grain or DETAIL_KEYS
     conds = {
         "null_required_keys": (
             F.col("invoice_month").isNull()
@@ -117,7 +111,7 @@ def dq_audit(calculated: DataFrame, grain: list[str] | None = None) -> DataFrame
         "mode4_zero_price_leak": (F.col("mode") == 4)
         & (F.isnan("discount_amount") | (F.abs("discount_amount") == float("inf"))),
     }
-    per_grain = calculated.groupBy(*grain).agg(
+    per_grain = calculated.groupBy(*DETAIL_KEYS).agg(
         F.count(F.lit(1)).alias("__n"),
         *[F.sum(cond.cast("long")).alias(name) for name, cond in conds.items()],
     )

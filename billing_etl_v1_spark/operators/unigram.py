@@ -84,27 +84,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from billing_etl_v1_spark.operators import _memo
 from billing_etl_v1_spark.operators.bpe import _pretokens, word_vocab
 
 # training decisions happen on this integer grid (see module docstring §3)
 ILP_SCALE = 1_000_000
 
 
-# (session id, word_vocab semanticHash, vocab_size, max_piece_len,
-#  max_word_len, em_rounds, seed_multiplier) -> (analyzed, pieces, segments)
-# — the bpe._LEARN_CACHE pattern: docs_unigram_vocab / docs_unigram_tokens
-# on the same corpus train once per session.
-_LEARN_CACHE: dict[tuple, tuple[object, DataFrame, DataFrame]] = {}
+# (pieces, segments) per corpus plan and hyperparameters, so
+# docs_unigram_vocab / docs_unigram_tokens on the same corpus train once
+# per session (see _memo)
+_LEARN_CACHE: _memo.Registry = {}
 
 
 def release_unigram_cache(spark=None) -> int:
     """Drop memoized training results (for ``spark`` only, or all)."""
-    dropped = 0
-    for key in list(_LEARN_CACHE):
-        if spark is None or key[0] == id(spark):
-            del _LEARN_CACHE[key]
-            dropped += 1
-    return dropped
+    return _memo.release(_LEARN_CACHE, spark)
 
 
 def viterbi_segment(
@@ -238,28 +233,22 @@ def unigram_learn(
         raise ValueError(f"max_word_len must be >= 1, got {max_word_len}")
     if em_rounds < 0:
         raise ValueError(f"em_rounds must be >= 0, got {em_rounds}")
-    spark = df.sparkSession
     words_all = word_vocab(df, text_col, level="char").select("word", "freq")
-    analyzed = words_all._jdf.queryExecution().analyzed()
-    key = (
-        id(spark),
-        analyzed.semanticHash(),
-        vocab_size,
-        max_piece_len,
-        max_word_len,
-        em_rounds,
-        seed_multiplier,
+    params = (vocab_size, max_piece_len, max_word_len, em_rounds, seed_multiplier)
+    return _memo.memoize(
+        words_all, _LEARN_CACHE, params, lambda: _unigram_train(words_all, *params)
     )
-    hit = _LEARN_CACHE.get(key)
-    if hit is not None:
-        plan, p_hit, s_hit = hit
-        try:
-            if plan.sameResult(analyzed):
-                return p_hit, s_hit
-        except Exception:
-            pass  # stopped session / dead JVM handle — miss, evict
-        del _LEARN_CACHE[key]
 
+
+def _unigram_train(
+    words_all: DataFrame,
+    vocab_size: int,
+    max_piece_len: int,
+    max_word_len: int,
+    em_rounds: int,
+    seed_multiplier: int,
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`unigram_learn`'s training run over the word table."""
     # the EM loop iterates on the BOUNDED word table; checkpoint it once
     # so rounds don't re-run the corpus aggregate (the bpe_learn posture)
     words_all = words_all.localCheckpoint()
@@ -387,7 +376,6 @@ def unigram_learn(
         .withColumn("n_tokens", F.size("pieces").cast("bigint"))
     )
 
-    _LEARN_CACHE[key] = (analyzed, pieces_out, segments_out)
     return pieces_out, segments_out
 
 

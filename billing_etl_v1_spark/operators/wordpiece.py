@@ -68,6 +68,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from billing_etl_v1_spark.operators import _memo
 from billing_etl_v1_spark.operators.bpe import (
     _apply_merge,
     _by_pos,
@@ -78,21 +79,15 @@ from billing_etl_v1_spark.operators.bpe import (
 
 WP_UNK = "[UNK]"
 
-# (session id, word_vocab semanticHash, num_merges, max_word_len) ->
-# (analyzed plan, merges, token_ids, segments) — one train serves the
-# vocab/tokens/fertility/seq/pack queries (the bpe/unigram memo pattern)
-_LEARN_CACHE: dict[tuple[int, int, int, int], tuple] = {}
+# (merges, token_ids, segments, state) per corpus plan, budget and cap —
+# one train serves the vocab/tokens/fertility/seq/pack queries (see _memo)
+_LEARN_CACHE: _memo.Registry = {}
 
 
 def release_wordpiece_cache(spark=None) -> int:
     """Drop memoized training results (for ``spark`` only, or all
     sessions)."""
-    dropped = 0
-    for key in list(_LEARN_CACHE):
-        if spark is None or key[0] == id(spark):
-            del _LEARN_CACHE[key]
-            dropped += 1
-    return dropped
+    return _memo.release(_LEARN_CACHE, spark)
 
 
 def _wp_symbols(col: Column) -> Column:
@@ -213,20 +208,20 @@ def _learn_full(
         raise ValueError(f"num_merges must be >= 0, got {num_merges}")
     if max_word_len < 1:
         raise ValueError(f"max_word_len must be >= 1, got {max_word_len}")
-    spark = df.sparkSession
     base = wp_word_vocab(df, text_col)
-    analyzed = base._jdf.queryExecution().analyzed()
-    key = (id(spark), analyzed.semanticHash(), num_merges, max_word_len)
-    hit = _LEARN_CACHE.get(key)
-    if hit is not None:
-        plan, m_hit, i_hit, s_hit, st_hit = hit
-        try:
-            if plan.sameResult(analyzed):
-                return m_hit, i_hit, s_hit, st_hit
-        except Exception:
-            pass  # stopped session / dead JVM handle — miss, evict
-        del _LEARN_CACHE[key]
+    return _memo.memoize(
+        base,
+        _LEARN_CACHE,
+        (num_merges, max_word_len),
+        lambda: _wordpiece_train(base, num_merges, max_word_len),
+    )
 
+
+def _wordpiece_train(
+    base: DataFrame, num_merges: int, max_word_len: int
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """:func:`_learn_full`'s training run over the word table."""
+    spark = base.sparkSession
     base = base.localCheckpoint()
     bypass = base.filter(F.size("s") > max_word_len)
     pos = _with_nxt(
@@ -309,7 +304,6 @@ def _learn_full(
     segments = wordpiece_segments(
         base.select("word", "freq"), token_ids, max_word_len=max_word_len
     )
-    _LEARN_CACHE[key] = (analyzed, merges, token_ids, segments, state)
     return merges, token_ids, segments, state
 
 

@@ -75,11 +75,9 @@ def write_bucketed(
     key: str,
     buckets: int = 32,
     path: str | None = None,
-    sort: bool = True,
-    mode: str = "overwrite",
 ) -> None:
-    """Bucketed table sink: pre-shuffles rows into `buckets` files by
-    hash(key) and (optionally) sorts within each bucket.
+    """Bucketed table sink: overwrites ``table`` with rows pre-shuffled
+    into `buckets` files by hash(key) and sorted by key within each bucket.
 
     This is the 100 TB answer to "this join runs every day on the same
     key": two tables bucketed by the same key with the same bucket count
@@ -89,40 +87,38 @@ def write_bucketed(
     The reference has no equivalent; its substitute was re-aggregating in
     ClickHouse per query (reference billing_calculation_service.py:164-187).
     """
-    writer = df.write.mode(mode).bucketBy(buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
+    writer = df.write.mode("overwrite").bucketBy(buckets, key).sortBy(key)
     if path is not None:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
-    """CSV sink (the reference's only non-DB sink is its failure-log CSV,
-    reference main.py:15-32 / billing_calculation_service.py:19-34; here it
-    is a general partitioned sink). Arrays/maps are not CSV-representable —
-    callers serialize them (to_json) first; Spark raises otherwise, which is
-    the correct loud failure."""
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
+    """CSV sink, overwriting ``path`` (the reference's only non-DB sink is
+    its failure-log CSV, reference main.py:15-32 /
+    billing_calculation_service.py:19-34; here it is a general partitioned
+    sink). Arrays/maps are not CSV-representable — callers serialize them
+    (to_json) first; Spark raises otherwise, which is the correct loud
+    failure."""
+    df.write.mode("overwrite").option("header", header).csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink — schema-preserving for nested columns (arrays,
-    structs) that CSV cannot carry."""
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    """JSON-lines sink, overwriting ``path`` — schema-preserving for nested
+    columns (arrays, structs) that CSV cannot carry."""
+    df.write.mode("overwrite").json(path)
 
 
 def write_orc(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: tuple[str, ...] = (),
 ) -> None:
-    """ORC sink (Spark-native columnar; nested types, compression, and
-    partition directories exactly like the parquet sinks — for consumers
-    whose warehouse standardizes on ORC rather than parquet). A partitioned
-    overwrite replaces only the partitions present in ``df``."""
-    w = df.write.mode(mode)
+    """ORC sink, overwriting ``path`` (Spark-native columnar; nested types,
+    compression, and partition directories exactly like the parquet sinks —
+    for consumers whose warehouse standardizes on ORC rather than parquet).
+    A partitioned write replaces only the partitions present in ``df``."""
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
     w.orc(path)
@@ -171,9 +167,9 @@ def write_zordered(
     cols: tuple[str, ...],
     bits: int = 12,
     num_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
-    """Z-order (Morton-interleaved) layout: sort the data along a
+    """Z-order (Morton-interleaved) layout, overwriting ``path``: sort the
+    data along a
     space-filling curve over ``cols`` so that EVERY listed column has
     narrow per-file min/max ranges — the multi-column data-skipping
     layout (what Delta's OPTIMIZE ZORDER BY provides) that a plain sort
@@ -188,7 +184,6 @@ def write_zordered(
     clustered write pays. At 100 TB raise ``num_files`` to the target
     file-size budget; the curve quality is independent of file count.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import DateType, NumericType, TimestampNTZType, TimestampType
 
     # refuse non-orderable-as-number columns loudly: a string column casts
@@ -239,7 +234,7 @@ def write_zordered(
         .repartitionByRange(num_files, F.col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z", *helper)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

@@ -570,6 +570,33 @@ def test_dq_audit_detail_grain_rate_change_not_duplicate(spark):
     assert got["duplicate_grain_rows"] == 0
 
 
+def test_dq_audit_pipeline_grain_counts_match_the_8_key_grain(spark):
+    """On a production-grain frame conform fills the five detail-only keys
+    with constants, so the 13-key audit groups the rows exactly as an
+    8-key groupBy does: no row is a duplicate."""
+    import datetime as dt
+
+    import __spark_entry__ as em
+    from billing_etl_v1_spark.operators.aggregate import DETAIL_KEYS, PIPELINE_KEYS
+    from billing_etl_v1_spark.operators.conform import dq_audit
+    from billing_etl_v1_spark.plans.pipeline import billing_pipeline
+    from tests.conftest import SF_SMALL
+
+    fact, dim = em._billing_ctx(spark, SF_SMALL)
+    out = billing_pipeline(
+        fact, dim, grain="pipeline", etl_time=dt.datetime(2026, 1, 2)
+    ).cache()
+    detail_only = [k for k in DETAIL_KEYS if k not in PIPELINE_KEYS]
+    assert len(detail_only) == 5
+    assert out.select(*detail_only).distinct().count() == 1
+    per8 = out.groupBy(*PIPELINE_KEYS).count()
+    dup8 = per8.agg(F.sum(F.col("count") - 1)).first()[0]
+    got = {r["check"]: r.violations for r in dq_audit(out).collect()}
+    assert got["duplicate_grain_rows"] == dup8 == 0
+    assert out.select(*DETAIL_KEYS).distinct().count() == per8.count() == out.count() > 0
+    out.unpersist()
+
+
 def test_scd2_fingerprint_field_boundaries_and_sentinel(spark):
     """Version changes must never merge via fingerprint collisions:
     ('a|b','c') vs ('a','b|c') collide under a '|'-joined string, and a

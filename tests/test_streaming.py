@@ -78,7 +78,7 @@ def test_streaming_billing_ingest_day_split_across_batches(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    cols = [F.col(c).cast("string") for c in DETAIL_KEYS] + ["cost"]
+    cols = [*DETAIL_KEYS, "cost"]  # both sides are typed as TARGET_SCHEMA
     batch = billing_pipeline(fact, dim).select(*cols)
     streamed = read_calculated(spark, target).select(*cols)
     assert streamed.count() == batch.count() > 0

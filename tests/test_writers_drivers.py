@@ -71,6 +71,23 @@ def test_engine_reads_only_the_session_env_vars():
     assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}, sorted(names)
 
 
+def test_only_the_memo_module_keys_and_confirms_plans():
+    """``operators/_memo.py`` is the one implementation of the session
+    memo: no other module keys on ``semanticHash()`` or confirms a hit
+    with ``sameResult``."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "billing_etl_v1_spark"
+    callers = set()
+    for path in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("semanticHash", "sameResult")
+            ):
+                callers.add(path.relative_to(pkg).as_posix())
+    assert callers == {"operators/_memo.py"}, sorted(callers)
+
+
 @pytest.mark.parametrize("session_mode", ["dynamic", "static"])
 def test_month_overwrite_is_idempotent_and_partition_scoped(spark, tmp_path, session_mode):
     """The sink states its own overwrite mode: under a session whose
@@ -997,13 +1014,13 @@ def test_json_quarantine_splits_good_and_bad_rows(spark, tmp_path):
     assert [r.corrupt_record for r in bad.collect()] == ["this is not json"]
 
 
-def test_cli_tokenizer_family_flag_wordpiece_and_unigram_alias(
+def test_cli_tokenizer_family_flag_wordpiece_and_unigram(
     spark, tmp_path, monkeypatch
 ):
     """The unified tokenizer CLI (VERDICT r7 #7): --family wordpiece
     trains/serves the third family end-to-end, and --family unigram
-    produces the identical artifact as the legacy `unigram` subcommand
-    (back-compat alias)."""
+    persists the artifact that ``unigram_learn`` + ``save_unigram`` make
+    from the same corpus and bounds."""
     from billing_etl_v1_spark import cli
     from billing_etl_v1_spark.operators import unigram as ug_ops
     from billing_etl_v1_spark.operators import wordpiece as wp_ops
@@ -1058,21 +1075,26 @@ def test_cli_tokenizer_family_flag_wordpiece_and_unigram_alias(
     assert dcap == cap
     assert sorted(map(tuple, di.collect())) == sorted(map(tuple, ids.collect()))
 
-    # unigram via --family == legacy `unigram` subcommand, artifact-identical
+    # unigram via --family == the operators called directly on the same
+    # corpus and bounds (retrained: the memo is dropped in between)
     utok1, utok2 = str(tmp_path / "utok1"), str(tmp_path / "utok2")
     rc = cli.main(
         ["tokenizer", "train", "--family", "unigram", "--docs", train_path,
          "--tokenizer", utok1, "--vocab-size", "8"]
     )
     assert rc == 0
-    rc = cli.main(
-        ["unigram", "train", "--docs", train_path, "--tokenizer", utok2,
-         "--vocab-size", "8"]
+    ug_ops.release_unigram_cache(spark)
+    pieces, segments = ug_ops.unigram_learn(
+        spark.read.parquet(train_path),
+        vocab_size=8,
+        max_piece_len=4,
+        max_word_len=16,
+        em_rounds=2,
     )
-    assert rc == 0
+    ug_ops.save_unigram(pieces, segments, utok2, max_piece_len=4, max_word_len=16)
     p1, s1, mpl1, mwl1 = ug_ops.load_unigram(spark, utok1)
     p2, s2, mpl2, mwl2 = ug_ops.load_unigram(spark, utok2)
-    assert (mpl1, mwl1) == (mpl2, mwl2)
+    assert (mpl1, mwl1) == (mpl2, mwl2) == (4, 16)
     assert sorted(map(tuple, p1.collect())) == sorted(map(tuple, p2.collect()))
     assert sorted(map(tuple, s1.collect())) == sorted(map(tuple, s2.collect()))
     wp_ops.release_wordpiece_cache(spark)
